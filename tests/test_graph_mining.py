@@ -46,6 +46,7 @@ def test_pagerank_mass_bounds_and_node_set(spark):
     r = x82_pagerank_fixedpoint(spark, SF).toPandas()
     _, _, deg, baskets = _copurchase_edges(spark, SF)
     n_nodes = deg.count()
+    baskets.unpersist()
     # every node keeps its restart mass and receives only non-negative
     # contributions; floor truncation only ever removes mass
     assert len(r) == n_nodes
@@ -299,6 +300,7 @@ def test_kcore_monotone_against_degrees(spark):
 
     _, _, deg, baskets = _copurchase_edges(spark, SF)
     raw = {r["node"]: r["deg"] for r in deg.collect()}
+    baskets.unpersist()
     out = x89_kcore_peel(spark, SF).toPandas()
     assert len(out) > 0
     for row in out.itertuples():

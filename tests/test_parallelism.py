@@ -31,6 +31,25 @@ def test_spread_width_derives_from_input_bytes(spark, sf_dir):
         else:
             # input too small to pay for any exchange: untouched plan
             assert out is df
+        if table == "embeddings":
+            # Independent of the formula: the ~190 KB table is neither
+            # left on one task nor fanned to every core (local[4]).
+            assert 1 < out.rdd.getNumPartitions() < cores
+
+
+def test_spread_partly_unknown_sizes_uses_every_core(spark, sf_dir, monkeypatch):
+    import os
+
+    from video_stream_processing_spark.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    local = "file:" + os.path.join(os.path.abspath(sf_dir), "documents.parquet")
+    # one local file (~65 KB, a one-task width on its own) and one file
+    # whose size the driver cannot see: the byte total is partial, so the
+    # width falls back to the core count instead of deriving from it
+    monkeypatch.setattr(docs, "inputFiles", lambda: [local, "hdfs://nn/documents-2.parquet"])
+    out = ensure_parallelism(docs, "doc_id")
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
 
 def test_spread_per_row_heavy_uses_every_core(spark, sf_dir):

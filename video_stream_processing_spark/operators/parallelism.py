@@ -89,20 +89,24 @@ def ensure_parallelism(df: DataFrame, *keys: str, per_row_heavy: bool = False) -
     # cores (ceiling division: a 200MB file is 2 splits, not 1).
     est_splits = 0
     total_bytes = 0
+    sizes_known = True
     for f in files:
         size = 0
         if f.startswith("file:"):
             try:
                 size = os.path.getsize(f[len("file:"):])
             except OSError:
-                size = 0
+                sizes_known = False
+        else:
+            sizes_known = False
         total_bytes += size
         est_splits += max(1, -(-size // (128 << 20)))
     if est_splits >= cores:
         return df
-    if per_row_heavy or total_bytes <= 0:
-        # per-row-dominated work, or no usable size metadata (non-local
-        # paths): the pre-r16 behaviour — use every core
+    if per_row_heavy or not sizes_known or total_bytes <= 0:
+        # per-row-dominated work, or a file whose size is unknown
+        # (non-local path, unreadable): a partial byte total would
+        # undercount the input, so use every core (the pre-r16 behaviour)
         target = cores
     else:
         # byte-bound work: one task per ~_SPREAD_BYTES_PER_TASK of input,
