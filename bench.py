@@ -35,9 +35,9 @@ adjudication inputs so a reader never has to re-run anything:
   and max-min > 0.5 s), each with its spread and per-rep GC — the
   artifact alone explains any >1.15x mover.
 Structural fix (measured A/B, round 13): a System.gc() hint runs
-before every measured rep — DEFAULT ON, disable with
-SPARK_GRAFT_BENCH_GC_BETWEEN=0. The A/B at sf0.1 (3 reps, flat probes
-in both windows): total 92.5 s without vs 86.1 s with, the gain
+before every measured rep whenever the master is local (the only mode
+in which that one JVM holds the executors' heaps). The A/B at sf0.1 (3 reps,
+flat probes in both windows): total 92.5 s without vs 86.1 s with, the gain
 concentrated in the heavy queries that allocate most (x137 7.38->5.67,
 x130 9.57->8.25, x43 4.16->3.60, x39 3.91->3.12). Collecting the
 PREVIOUS query's garbage outside the timed region is measurement
@@ -45,6 +45,12 @@ hygiene — each query's number then reflects its own work, which is
 also why codec-heavy queries inflated mid-session in r9/r11/r12: they
 were paying earlier queries' heap debt. "gc_between" in the artifact
 records which mode produced the numbers.
+
+Subset timing for A/B work: ``python bench.py name [name ...]`` runs the
+same measuring loop over only the named queries and prints one indented
+JSON object ({"queries": medians, "samples": per-rep seconds,
+"probe_sec", "sf_dir"}). It writes no BENCH_DETAIL.json and skips the
+stream fps step.
 """
 
 from __future__ import annotations
@@ -54,11 +60,18 @@ import os
 import statistics
 import sys
 import time
+from dataclasses import dataclass
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from video_stream_processing_spark.plans.registry import query_map  # noqa: E402
-from video_stream_processing_spark.session import get_spark  # noqa: E402
+# release_since between queries: the shared audited localCheckpoint-block
+# release (its docstring holds the rationale and the reuse caveat)
+from video_stream_processing_spark.session import (  # noqa: E402
+    get_spark,
+    release_since,
+    snapshot_persistent_ids,
+)
 
 # Headline set: one per operator family (SURVEY.md §2 / §7.2) so the
 # number tracks the whole engine, not one hot loop.
@@ -121,91 +134,29 @@ def _sf_of(sf_dir: str) -> float:
         return -1.0
 
 
-def main() -> int:
+def main(argv: list[str] | None = None, spark=None) -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    names = sys.argv[1:] if argv is None else argv
+    if spark is None:
+        spark = get_spark("bench")
+        spark.sparkContext.setLogLevel("ERROR")
+    if names:  # subset timing for A/B work: no artifact, no stream step
+        t = measure(spark, names, sf_dir)
+        print(json.dumps({
+            "queries": {n: round(statistics.median(ts), 3) for n, ts in t.samples.items()},
+            "samples": {n: [round(s, 3) for s in ts] for n, ts in t.samples.items()},
+            "probe_sec": t.probes,
+            "sf_dir": sf_dir,
+        }, indent=1))
+        return 0
     qmap = query_map()
     names = [n for n in HEADLINE if n in qmap]
     # Extend with any extension/UDF headliners registered after this file
     # was written (keeps bench.py stable as coverage widens).
     names += [n for n in qmap if n.startswith(("x", "u")) and n not in names and qmap[n].__doc__ and "bench:headline" in (qmap[n].__doc__ or "")]
 
-    def run_full(df) -> None:
-        # noop sink materializes every row of the full plan on executors —
-        # unlike count(), which Catalyst can short-circuit to parquet
-        # row-group metadata for scan-shaped queries.
-        df.write.format("noop").mode("overwrite").save()
-
-    # Warmup at the smallest SF: JIT, codegen cache, parquet footer reads.
-    warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir):
-        for n in names:
-            try:
-                run_full(qmap[n](spark, warm_dir))
-            except Exception:
-                pass
-
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-    gc_between = os.environ.get("SPARK_GRAFT_BENCH_GC_BETWEEN", "1") == "1"
-    samples: dict[str, list[float]] = {n: [] for n in names}
-    gc_samples: dict[str, list[float]] = {n: [] for n in names}
-
-    jvm = spark.sparkContext._jvm
-
-    # The GC MXBean deltas and System.gc() hint below reach the DRIVER
-    # JVM only. In local mode driver == executors, so gc_sec is the
-    # whole story; on a cluster it would silently exclude executor
-    # heaps while still being emitted as adjudication evidence — so
-    # refuse to report it there rather than mislead. "local" /
-    # "local[...]" only: "local-cluster[...]" runs separate executor
-    # JVMs and is exactly the case the guard must exclude (r14 ADVICE).
-    master = spark.sparkContext.master
-    gc_is_whole_jvm = master == "local" or master.startswith("local[")
-    if not gc_is_whole_jvm:
-        gc_between = False
-
-    def gc_time_sec() -> float:
-        # cumulative stop-the-world time across all collectors, seconds
-        # (driver JVM == the only JVM under the local-mode check above)
-        if not gc_is_whole_jvm:
-            return 0.0
-        beans = jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
-        return sum(b.getCollectionTime() for b in beans) / 1000.0
-
-    def probe() -> float:
-        # fixed JVM-side control job: whole-stage-codegen sum over a 20M
-        # range — no I/O, no shuffle, so its runtime tracks machine/JVM
-        # load and nothing else
-        t0 = time.perf_counter()
-        spark.range(20_000_000).selectExpr("sum(id * 2) AS s").collect()
-        return round(time.perf_counter() - t0, 3)
-    # Scoped localCheckpoint-block release between queries: the shared
-    # audited helper (session.snapshot_persistent_ids / release_since)
-    # holds the rationale and the reuse caveat.
-    from video_stream_processing_spark.session import (
-        release_since,
-        snapshot_persistent_ids,
-    )
-
-    # Round-robin across queries (rep 1 of all, then rep 2, ...) so a
-    # transient machine-load spike hits at most one rep of each query
-    # instead of all reps of one query.
-    probes: list[float] = []
-    for _ in range(reps):
-        probes.append(probe())
-        for n in names:
-            baseline = snapshot_persistent_ids(spark)
-            if gc_between:
-                jvm.java.lang.System.gc()
-            g0 = gc_time_sec()
-            t0 = time.perf_counter()
-            run_full(qmap[n](spark, sf_dir))
-            samples[n].append(time.perf_counter() - t0)
-            gc_samples[n].append(round(gc_time_sec() - g0, 3))
-            release_since(spark, baseline)
-    probes.append(probe())
-
+    t = measure(spark, names, sf_dir)
+    samples, gc_samples, probes, gc_between = t.samples, t.gc, t.probes, t.gc_between
     timings = {n: round(statistics.median(ts), 3) for n, ts in samples.items()}
     spread = {n: [round(min(ts), 3), round(max(ts), 3)] for n, ts in samples.items()}
     gc_total = round(sum(sum(g) for g in gc_samples.values()), 3)
@@ -342,10 +293,10 @@ def main() -> int:
                 "probe_sec": probes,
                 "gc_sec": gc_total,
                 "gc_between": gc_between,
-                "gc_scope": "whole_jvm_local_mode" if gc_is_whole_jvm else "unavailable_nonlocal",
+                "gc_scope": "whole_jvm_local_mode" if gc_between else "unavailable_nonlocal",
                 "adjudicate": adjudicate,
                 "floor_shift": floor_shift,
-                "reps": reps,
+                "reps": t.reps,
                 "sf": _sf_of(sf_dir),
                 "stream_throughput_fps": stream_fps,
                 **({"stream_throughput_error": stream_err} if stream_err else {}),
@@ -392,6 +343,87 @@ def main() -> int:
         line = json.dumps(summary, separators=(",", ":"))
     print(line)
     return 0
+
+
+def run_full(df) -> None:
+    # noop sink materializes every row of the full plan on executors —
+    # unlike count(), which Catalyst can short-circuit to parquet
+    # row-group metadata for scan-shaped queries.
+    df.write.format("noop").mode("overwrite").save()
+
+
+@dataclass
+class Timings:
+    samples: dict[str, list[float]]  # per query, one wall time per rep
+    gc: dict[str, list[float]]  # per query, the JVM GC seconds inside each rep
+    probes: list[float]  # before each round-robin pass and once at the end
+    gc_between: bool  # the System.gc() hint ran before each rep
+    reps: int
+
+
+def measure(spark, names: list[str], sf_dir: str) -> Timings:
+    """The one query-timing loop: warm-up at the sf0.001 beside ``sf_dir``, then
+    SPARK_GRAFT_BENCH_REPS (default 3) round-robin passes over ``names``
+    at ``sf_dir``, each pass after a probe, each query after a
+    System.gc() hint (local mode only) and followed by release_since."""
+    qmap = query_map()
+    jvm = spark.sparkContext._jvm
+
+    # Warmup at the smallest SF, which sits beside the measured one: JIT,
+    # codegen cache, parquet footer reads.
+    warm_dir = os.path.join(os.path.dirname(os.path.abspath(sf_dir)), "sf0.001")
+    if os.path.isdir(warm_dir):
+        for n in names:
+            try:
+                run_full(qmap[n](spark, warm_dir))
+            except Exception:
+                pass
+
+    # The GC MXBean deltas and System.gc() hint below reach the DRIVER
+    # JVM only. In local mode driver == executors, so gc_sec is the
+    # whole story; on a cluster it would silently exclude executor
+    # heaps while still being emitted as adjudication evidence — so
+    # refuse to report it there rather than mislead. "local" /
+    # "local[...]" only: "local-cluster[...]" runs separate executor
+    # JVMs and is exactly the case the guard must exclude (r14 ADVICE).
+    master = spark.sparkContext.master
+    gc_between = master == "local" or master.startswith("local[")
+
+    def gc_time_sec() -> float:
+        # cumulative stop-the-world time across all collectors, seconds
+        # (driver JVM == the only JVM under the local-mode check above)
+        if not gc_between:
+            return 0.0
+        beans = jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+        return sum(b.getCollectionTime() for b in beans) / 1000.0
+
+    def probe() -> float:
+        # fixed JVM-side control job: whole-stage-codegen sum over a 20M
+        # range — no I/O, no shuffle, so its runtime tracks machine/JVM
+        # load and nothing else
+        t0 = time.perf_counter()
+        spark.range(20_000_000).selectExpr("sum(id * 2) AS s").collect()
+        return round(time.perf_counter() - t0, 3)
+
+    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
+    t = Timings({n: [] for n in names}, {n: [] for n in names}, [], gc_between, reps)
+    # Round-robin across queries (rep 1 of all, then rep 2, ...) so a
+    # transient machine-load spike hits at most one rep of each query
+    # instead of all reps of one query.
+    for _ in range(reps):
+        t.probes.append(probe())
+        for n in names:
+            baseline = snapshot_persistent_ids(spark)
+            if gc_between:
+                jvm.java.lang.System.gc()
+            g0 = gc_time_sec()
+            t0 = time.perf_counter()
+            run_full(qmap[n](spark, sf_dir))
+            t.samples[n].append(time.perf_counter() - t0)
+            t.gc[n].append(round(gc_time_sec() - g0, 3))
+            release_since(spark, baseline)
+    t.probes.append(probe())
+    return t
 
 
 if __name__ == "__main__":

@@ -15,12 +15,6 @@ import os
 
 import pytest
 
-try:  # transformWithState needs google.protobuf on the worker
-    import google.protobuf.descriptor  # noqa: F401
-
-    _HAS_PROTOBUF = True
-except ImportError:
-    _HAS_PROTOBUF = False
 from pyspark.sql import functions as F
 
 SEG_MS = 180_000
@@ -190,68 +184,3 @@ def test_rate_frames_schema(spark):
     assert [f.name for f in df.schema.fields] == [
         "stream_id", "frame_id", "ts", "scene_signal", "frame_data",
     ]
-
-
-@pytest.mark.skipif(
-    not _HAS_PROTOBUF, reason="transformWithState's worker protocol needs the protobuf package"
-)
-def test_exact_segments_stream_tws_matches_apply_form(spark, frames_dir, tmp_path):
-    """r9: the transformWithStateInPandas twin (Spark 4's successor
-    stateful API) emits EXACTLY the applyInPandasWithState form's
-    segments — and therefore the batch-exact operator's — including the
-    timer-flushed tails. Skipped where `protobuf` is absent (this
-    container): TWS ships state across the Python worker boundary as
-    protobuf messages, a hard import at stream start."""
-    from video_stream_processing_spark.operators.segments import segment_windows_exact
-    from video_stream_processing_spark.streaming.stateful import (
-        exact_segments_stream_tws,
-    )
-
-    out = exact_segments_stream_tws(
-        _stream(spark, frames_dir), duration_ms=SEG_MS, watermark="1 minute"
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("segs_tws")
-        .option("checkpointLocation", str(tmp_path / "ck_tws"))
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        q.processAllAvailable()  # extra batch lets the event-time timer fire
-    finally:
-        q.stop()
-    got = {
-        (r["stream_id"], r["start_time"], r["end_time"], r["frame_count"], r["closed_by"])
-        for r in spark.sql("SELECT * FROM segs_tws").collect()
-        if r["stream_id"] != "sentinel"
-    }
-    batch = spark.read.parquet(frames_dir).where(F.col("stream_id") != "sentinel")
-    want_rows = segment_windows_exact(
-        batch.select("stream_id", "ts"), duration_ms=SEG_MS
-    ).collect()
-    want = {
-        (r["stream_id"], r["start_time"], r["end_time"], r["frame_count"])
-        for r in want_rows
-    }
-    assert {(s, a, b, c) for (s, a, b, c, _w) in got} == want
-    # the trigger-inclusive close and the timer-flushed tail both present
-    assert any(w == "size" for (_s, _a, _b, _c, w) in got)
-    assert any(w == "timeout" for (_s, _a, _b, _c, w) in got)
-
-
-def test_exact_segments_stream_tws_plan_builds(spark, frames_dir):
-    """The TWS twin's plan constructs and analyzes in-container (schema
-    contract + streaming-ness) even though stream START needs protobuf —
-    so the path is exercised up to the environment boundary, like the
-    Kafka builder (no broker) and FFmpegEncoder (no ffmpeg)."""
-    from video_stream_processing_spark.streaming.stateful import (
-        SEGMENT_OUT_SCHEMA,
-        exact_segments_stream_tws,
-    )
-    from pyspark.sql.types import _parse_datatype_string
-
-    out = exact_segments_stream_tws(_stream(spark, frames_dir), duration_ms=SEG_MS)
-    assert out.isStreaming
-    assert out.schema == _parse_datatype_string(SEGMENT_OUT_SCHEMA)

@@ -10,6 +10,10 @@ For each query, inspects the formatted explain output and reports:
   - python: Arrow/Pandas UDF eval nodes (should exist ONLY for the
     declared UDF-surface queries)
   - codegen: WholeStageCodegen span count
+  - gen-filter: optimized-plan Filters over ``size(f(g(...)))``: the
+    ``size(arr) > 0`` that ``explode(arr)`` infers, with a computed
+    ``arr``'s derivation chain inlined by pushdown, so it runs twice per
+    row (r15 finding 3). A report, not a gate.
 
 Usage: python tools/plan_audit.py [sf_dir] [names...]   (writes PLANS.md)
 """
@@ -25,6 +29,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from video_stream_processing_spark.plans.registry import all_queries, query_map
 from video_stream_processing_spark.session import get_spark
 
+_COMPUTED_SIZE = re.compile(r"size\(\w+\(\s*\w+\(")
+
 
 def audit_plan(df) -> dict:
     qe = df._jdf.queryExecution()
@@ -32,6 +38,7 @@ def audit_plan(df) -> dict:
     plan = qe.explainString(
         jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
+    optimized = qe.optimizedPlan().toString()
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
     return {
         "scans": plan.count("Scan parquet"),
@@ -51,6 +58,11 @@ def audit_plan(df) -> dict:
         + plan.count("MapInArrow"),
         "codegen_spans": len(set(re.findall(r"codegen id : (\d+)", plan))),
         "aqe": "AdaptiveSparkPlan" in plan,
+        "gen_filters": sum(
+            len(_COMPUTED_SIZE.findall(line))
+            for line in optimized.splitlines()
+            if line.strip().lstrip("+-: ").startswith("Filter")
+        ),
     }
 
 
@@ -65,11 +77,11 @@ def main() -> int:
 
     def render_row(n: str, a: dict) -> str:
         if "error" in a:
-            return f"| {n} | ERROR: {a['error']} | | | | | | | |"
+            return f"| {n} | ERROR: {a['error']} | | | | | | | | |"
         return (
             f"| {n} | {a['scans']} | {a['pushed_filters']} | {a['broadcast_joins']} "
             f"| {a['shuffle_joins']} | {a['exchanges']} | {a['python_udf']} "
-            f"| {a['codegen_spans']} | {'Y' if a['aqe'] else '-'} |"
+            f"| {a['codegen_spans']} | {'Y' if a['aqe'] else '-'} | {a['gen_filters']} |"
         )
 
     rows = []
@@ -84,10 +96,11 @@ def main() -> int:
         "",
         f"Scale factor dir: `{sf_dir}`. Static plans (AQE may further",
         "coalesce/convert at runtime). `python_udf` > 0 only where the",
-        "operator is genuinely a pandas-UDF surface.",
+        "operator is genuinely a pandas-UDF surface. `gen-filter` counts",
+        "generator-filter sites in the optimized plan (see the tool's docstring).",
         "",
-        "| query | scans | pushed | bcast joins | shuffle joins | exchanges | py-UDF | codegen | AQE |",
-        "|---|---|---|---|---|---|---|---|---|",
+        "| query | scans | pushed | bcast joins | shuffle joins | exchanges | py-UDF | codegen | AQE | gen-filter |",
+        "|---|---|---|---|---|---|---|---|---|---|",
     ]
     lines.extend(render_row(n, a) for n, a in rows)
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")

@@ -1,125 +1,97 @@
 #!/usr/bin/env python
 """Per-query stage-level profiler (optimization guide §1 "measure first").
 
-Runs one or more declared queries at the given SF with the Spark UI
-enabled, executes each through the noop sink, and reports per-stage
-wall/CPU/shuffle metrics scraped from the UI REST API — the empirical
+Runs one or more declared queries at the given SF after one warm-up
+execution at the same SF, executes each through the noop sink under its
+own job group, and reports per-stage wall/CPU/shuffle metrics read from
+Spark's status store (the Spark UI stays disabled) — the empirical
 half of the optimization loop (which stage is slow, and is it compute,
 shuffle read, or scheduling).
 
 Usage: python tools/profile_query.py [sf_dir] name [name...]
-       SPARK_GRAFT_PROFILE_REPS=N (default 2; the LAST rep is profiled,
-       earlier reps are warmup at the same SF)
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 from video_stream_processing_spark.plans.registry import query_map
-from video_stream_processing_spark.session import RUNTIME_CONF, ensure_session_conf
+from video_stream_processing_spark.session import (
+    get_spark,
+    release_since,
+    snapshot_persistent_ids,
+)
 
 
-def get_profiling_spark() -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (
-        SparkSession.builder.appName("profile")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.cleaner.periodicGC.interval", "5min")
-    )
-    for k, v in RUNTIME_CONF.items():
-        builder = builder.config(k, v)
-    return ensure_session_conf(builder.getOrCreate())
+def _run(spark, fn, sf_dir: str) -> None:
+    base = snapshot_persistent_ids(spark)
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    release_since(spark, base)
 
 
-def rest(spark: SparkSession, path: str):
-    ui = spark.sparkContext.uiWebUrl
-    with urllib.request.urlopen(f"{ui}/api/v1/{path}") as r:
-        return json.loads(r.read())
+def profile(spark, name: str, sf_dir: str) -> tuple[float, int, list[tuple]]:
+    """(wall seconds, job count, one row per stage) for one profiled
+    execution of ``name``; a row is (wall_s, stage_id, tasks, run_s,
+    cpu_s, shuffle_read_bytes, shuffle_write_bytes, input_bytes, name),
+    slowest first."""
+    fn = query_map()[name]
+    sc = spark.sparkContext
+    _run(spark, fn, sf_dir)  # warm-up
+    sc._jvm.java.lang.System.gc()
+    group = f"profile:{name}:{time.time_ns()}"
+    sc.setJobGroup(group, f"profile:{name}")
+    t0 = time.perf_counter()
+    try:
+        _run(spark, fn, sf_dir)
+    finally:
+        wall = time.perf_counter() - t0
+        sc._jsc.clearJobGroup()
+    store = sc._jsc.sc().statusStore()
+    jobs = store.jobsList(None)
+    stage_ids: set[int] = set()
+    n_jobs = 0
+    for i in range(jobs.size()):
+        j = jobs.apply(i)
+        if j.jobGroup().isDefined() and j.jobGroup().get() == group:
+            n_jobs += 1
+            ids = j.stageIds()
+            stage_ids.update(ids.apply(k) for k in range(ids.size()))
+    rows = []
+    for sid in sorted(stage_ids):
+        s = store.lastStageAttempt(sid)
+        dur = 0.0
+        if s.firstTaskLaunchedTime().isDefined() and s.completionTime().isDefined():
+            dur = (s.completionTime().get().getTime() - s.firstTaskLaunchedTime().get().getTime()) / 1e3
+        rows.append(
+            (
+                dur,
+                sid,
+                s.numCompleteTasks(),
+                s.executorRunTime() / 1e3,
+                s.executorCpuTime() / 1e9,
+                s.shuffleReadBytes(),
+                s.shuffleWriteBytes(),
+                s.inputBytes(),
+                (s.name() or "")[:60],
+            )
+        )
+    rows.sort(reverse=True)
+    return wall, n_jobs, rows
 
 
 def main() -> int:
     args = sys.argv[1:]
     sf_dir = args[0] if args and os.path.isdir(args[0]) else "/root/testdata/sf0.1"
     names = args[1:] if args and os.path.isdir(args[0]) else args
-    reps = int(os.environ.get("SPARK_GRAFT_PROFILE_REPS", "2"))
-    spark = get_profiling_spark()
+    spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
-    app_id = spark.sparkContext.applicationId
-    qmap = query_map()
-    sc = spark.sparkContext
-
-    from video_stream_processing_spark.session import (
-        release_since,
-        snapshot_persistent_ids,
-    )
-
     for n in names:
-        fn = qmap[n]
-        for i in range(reps - 1):
-            base = snapshot_persistent_ids(spark)
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            release_since(spark, base)
-        base = snapshot_persistent_ids(spark)
-        sc._jvm.java.lang.System.gc()
-        jobs_before = {j["jobId"] for j in rest(spark, f"applications/{app_id}/jobs")}
-        sc.setJobDescription(f"profile:{n}")
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
-        sc.setJobDescription(None)
-        release_since(spark, base)
-        jobs = [
-            j
-            for j in rest(spark, f"applications/{app_id}/jobs")
-            if j["jobId"] not in jobs_before
-        ]
-        stage_ids = sorted({s for j in jobs for s in j["stageIds"]})
-        all_stages = {
-            s["stageId"]: s
-            for s in rest(spark, f"applications/{app_id}/stages")
-            if s["stageId"] in stage_ids
-        }
-        print(f"\n=== {n}: wall {wall:.3f}s, {len(jobs)} jobs, {len(stage_ids)} stages ===")
-        rows = []
-        for sid in stage_ids:
-            s = all_stages.get(sid)
-            if not s:
-                continue
-            dur = 0.0
-            if s.get("firstTaskLaunchedTime") and s.get("completionTime"):
-                fmt = "%Y-%m-%dT%H:%M:%S.%f"
-                from datetime import datetime
-
-                t1 = datetime.strptime(s["firstTaskLaunchedTime"][:-3], fmt)
-                t2 = datetime.strptime(s["completionTime"][:-3], fmt)
-                dur = (t2 - t1).total_seconds()
-            rows.append(
-                (
-                    dur,
-                    sid,
-                    s["numCompleteTasks"],
-                    s.get("executorRunTime", 0) / 1000.0,
-                    s.get("executorCpuTime", 0) / 1e9,
-                    s.get("shuffleReadBytes", 0),
-                    s.get("shuffleWriteBytes", 0),
-                    s.get("inputBytes", 0),
-                    (s.get("name") or "")[:60],
-                )
-            )
-        rows.sort(reverse=True)
+        wall, n_jobs, rows = profile(spark, n, sf_dir)
+        print(f"\n=== {n}: wall {wall:.3f}s, {n_jobs} jobs, {len(rows)} stages ===")
         print(f"{'wall_s':>7} {'stage':>5} {'tasks':>5} {'run_s':>7} {'cpu_s':>7} {'shR_kb':>8} {'shW_kb':>8} {'in_kb':>8}  name")
         for dur, sid, nt, run, cpu, shr, shw, inp, name in rows[:18]:
             print(

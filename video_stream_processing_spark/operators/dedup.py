@@ -113,20 +113,6 @@ def _minhash_wide(
     return halves.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = NUM_HASHES,
-    shingle_k: int | None = SHINGLE_K,
-) -> DataFrame:
-    """(doc_id, k, mh): per-doc MinHash signature rows (mh BIGINT) — the
-    tall view of _minhash_wide, unpivoted with stack() (a narrow Expand,
-    no extra shuffle)."""
-    wide = _minhash_wide(docs, text_col, num_hashes, shingle_k)
-    pairs = ", ".join(f"{k}, mh{k}" for k in range(num_hashes))
-    return wide.selectExpr("doc_id", f"stack({num_hashes}, {pairs}) AS (k, mh)")
-
-
 def _band_buckets(
     wide: DataFrame, num_hashes: int = NUM_HASHES, band_rows: int = BAND_ROWS
 ) -> DataFrame:
@@ -153,28 +139,6 @@ def _band_buckets(
     return wide.select("doc_id", F.explode(bands).alias("bb")).select(
         "doc_id", F.col("bb.band_id").alias("band_id"), F.col("bb.band_key").alias("band_key")
     )
-
-
-def lsh_candidate_pairs(sigs: DataFrame, band_rows: int = BAND_ROWS) -> DataFrame:
-    """Band signatures into buckets; docs sharing any (band_id, band_key)
-    bucket become candidate pairs. The self-join is per-bucket, so work is
-    proportional to collisions, not to n^2. Input is the tall
-    (doc_id, k, mh) shape; the hot path goes through _band_buckets on the
-    wide shape instead."""
-    bands = (
-        sigs.withColumn("band_id", (F.col("k") / band_rows).cast("int"))
-        .groupBy("doc_id", "band_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("k", "mh"))),
-                    lambda s: s["mh"].cast("string"),
-                ),
-                "|",
-            ).alias("band_key")
-        )
-    )
-    return _bucket_join(bands)
 
 
 def _bucket_join(

@@ -271,12 +271,6 @@ def normalize_col(text_col: str = "text") -> Column:
     )
 
 
-def mean_word_length(text_col: str = "text") -> Column:
-    return F.aggregate(
-        tokens_col(text_col), F.lit(0).cast("long"), lambda a, w: a + F.length(w)
-    ).cast("double") / F.greatest(word_count(text_col), F.lit(1))
-
-
 def curation_rules_over_tokens(toks: Column) -> dict[str, Column]:
     """The C4/Gopher keep rules over an ALREADY-TOKENIZED array column —
     the single rule source both forms share: ``curation_rules`` passes

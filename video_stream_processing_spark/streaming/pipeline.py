@@ -371,6 +371,55 @@ def fertility_stream(
     )
 
 
+def _signature_stream(frames: DataFrame, make_sig) -> DataFrame:
+    """(doc_id, ts, sig) from (doc_id, ts, payload) rows, computed inside
+    one Arrow pass: ``make_sig()`` runs once per task on the executor
+    (so codec imports stay worker-side) and returns the per-payload
+    signature function; a payload it maps to None (undecodable, too
+    short) is dropped."""
+
+    def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        sig_of = make_sig()
+        for pdf in batches:
+            sigs = [sig_of(blob) for blob in pdf["payload"]]
+            yield pd.DataFrame(
+                {"doc_id": pdf["doc_id"], "ts": pdf["ts"], "sig": sigs}
+            )
+
+    return frames.mapInPandas(
+        hash_batch, schema="doc_id long, ts timestamp, sig string"
+    ).where(F.col("sig").isNotNull())
+
+
+def _dhash_sig():
+    from video_stream_processing_spark.functions.imagecodec import decode_image_bgr
+    from video_stream_processing_spark.operators.multimodal import dhash64
+
+    def sig(blob):
+        img = decode_image_bgr(blob)
+        return None if img is None else dhash64(img)
+
+    return sig
+
+
+def _afp_sig():
+    from video_stream_processing_spark.functions.wavcodec import decode_wav
+    from video_stream_processing_spark.operators.audio import afp64
+
+    def sig(blob):
+        decoded = decode_wav(bytes(blob))
+        return None if decoded is None else afp64(decoded[0])
+
+    return sig
+
+
+def _clip_sig():
+    from video_stream_processing_spark.operators.multimodal import make_clip_sig_kernel
+
+    clip_sig = make_clip_sig_kernel()
+    return lambda blob: clip_sig(bytes(blob))
+
+
 def image_dedup_stream(
     frames: DataFrame,
     watermark: str = "10 minutes",
@@ -392,24 +441,7 @@ def image_dedup_stream(
     4 band tables. Pixels never leave the Arrow pass; only (doc_id,
     ts, sig) flows into state."""
 
-    def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from video_stream_processing_spark.functions.imagecodec import (
-            decode_image_bgr,
-        )
-        from video_stream_processing_spark.operators.multimodal import dhash64
-
-        for pdf in batches:
-            sigs = []
-            for blob in pdf["payload"]:
-                img = decode_image_bgr(blob)
-                sigs.append(None if img is None else dhash64(img))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "ts": pdf["ts"], "sig": sigs}
-            )
-
-    hashed = frames.mapInPandas(
-        hash_batch, schema="doc_id long, ts timestamp, sig string"
-    ).where(F.col("sig").isNotNull())
+    hashed = _signature_stream(frames, _dhash_sig)
     return hashed.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["sig"]
     )
@@ -524,24 +556,7 @@ def image_neardup_dedup_stream(
     Arrow pass; only (doc_id, ts, sig) flows into the joins and
     state."""
 
-    def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from video_stream_processing_spark.functions.imagecodec import (
-            decode_image_bgr,
-        )
-        from video_stream_processing_spark.operators.multimodal import dhash64
-
-        for pdf in batches:
-            sigs = []
-            for blob in pdf["payload"]:
-                img = decode_image_bgr(blob)
-                sigs.append(None if img is None else dhash64(img))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "ts": pdf["ts"], "sig": sigs}
-            )
-
-    hashed = frames.mapInPandas(
-        hash_batch, schema="doc_id long, ts timestamp, sig string"
-    ).where(F.col("sig").isNotNull())
+    hashed = _signature_stream(frames, _dhash_sig)
     return neardup_gate_stream(
         hashed, index_sig, watermark=watermark, max_hamming=max_hamming,
         n_bands=n_bands,
@@ -566,22 +581,7 @@ def audio_neardup_dedup_stream(
     Audio bytes never leave the Arrow pass; only (doc_id, ts, sig)
     flows into the joins and state."""
 
-    def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from video_stream_processing_spark.functions.wavcodec import decode_wav
-        from video_stream_processing_spark.operators.audio import afp64
-
-        for pdf in batches:
-            sigs = []
-            for blob in pdf["payload"]:
-                decoded = decode_wav(bytes(blob))
-                sigs.append(None if decoded is None else afp64(decoded[0]))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "ts": pdf["ts"], "sig": sigs}
-            )
-
-    hashed = clips.mapInPandas(
-        hash_batch, schema="doc_id long, ts timestamp, sig string"
-    ).where(F.col("sig").isNotNull())
+    hashed = _signature_stream(clips, _afp_sig)
     return neardup_gate_stream(
         hashed, index_sig, watermark=watermark, max_hamming=max_hamming,
         n_bands=n_bands,
@@ -607,21 +607,7 @@ def video_neardup_dedup_stream(
     demux to exactly VFP_FRAMES decodable frames yield no signature and
     drop (decode-or-null). Clip bytes and pixels never leave the Arrow
     pass; only (doc_id, ts, sig) flows into the joins and state."""
-    def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from video_stream_processing_spark.operators.multimodal import (
-            make_clip_sig_kernel,
-        )
-
-        clip_sig = make_clip_sig_kernel()
-        for pdf in batches:
-            sigs = [clip_sig(bytes(blob)) for blob in pdf["payload"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "ts": pdf["ts"], "sig": sigs}
-            )
-
-    hashed = clips.mapInPandas(
-        hash_batch, schema="doc_id long, ts timestamp, sig string"
-    ).where(F.col("sig").isNotNull())
+    hashed = _signature_stream(clips, _clip_sig)
     return neardup_gate_stream(
         hashed, index_sig, watermark=watermark, max_hamming=max_hamming,
         n_bands=n_bands,

@@ -24,6 +24,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _overwrite_batch(df: DataFrame, batch_id: int, out_dir: str, *partition_cols: str) -> None:
+    """Write ``df`` as parquet under its own ``__batch_id=<batch_id>``
+    partition (then ``partition_cols``) with dynamic OVERWRITE: a batch
+    replayed after a failure between sink-write and checkpoint commit
+    replaces its own partition instead of appending duplicates."""
+    (
+        df.withColumn("__batch_id", F.lit(batch_id))
+        .write.partitionBy("__batch_id", *partition_cols)
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(out_dir)
+    )
+
+
 def write_detections_fact(out_dir: str):
     """foreachBatch sink: append micro-batch to a parquet fact table
     partitioned by (stream_id, date_key, hour_key) — the layout the
@@ -55,13 +69,9 @@ def write_detections_fact_idempotent(out_dir: str):
     just another partition column (prune or drop it)."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("date_key", F.date_format("detection_time", "yyyyMMdd"))
-            .withColumn("__batch_id", F.lit(batch_id))
-            .write.partitionBy("__batch_id", "stream_id", "date_key")
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(out_dir)
+        _overwrite_batch(
+            batch_df.withColumn("date_key", F.date_format("detection_time", "yyyyMMdd")),
+            batch_id, out_dir, "stream_id", "date_key",
         )
 
     return sink
@@ -76,13 +86,7 @@ def write_docs_idempotent(out_dir: str):
     as write_detections_fact_idempotent, schema-agnostic."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("__batch_id", F.lit(batch_id))
-            .write.partitionBy("__batch_id")
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(out_dir)
-        )
+        _overwrite_batch(batch_df, batch_id, out_dir)
 
     return sink
 
@@ -146,13 +150,7 @@ def lsh_index_refresh_sink(
 
         pre_ids = snapshot_persistent_ids(spark)
         batch_df = batch_df.localCheckpoint(eager=True)
-        (
-            batch_df.withColumn("__batch_id", F.lit(batch_id))
-            .write.partitionBy("__batch_id")
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(docs_dir)
-        )
+        _overwrite_batch(batch_df, batch_id, docs_dir)
         bands = _band_buckets(_minhash_wide(batch_df, text_col)).localCheckpoint(
             eager=True
         )
@@ -175,13 +173,7 @@ def lsh_index_refresh_sink(
             cand = cross.unionByName(in_batch)
         else:
             cand = in_batch
-        (
-            bands.withColumn("__batch_id", F.lit(batch_id))
-            .write.partitionBy("__batch_id")
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(index_dir)
-        )
+        _overwrite_batch(bands, batch_id, index_dir)
         all_docs = spark.read.parquet(docs_dir).where(F.col("__batch_id") <= batch_id)
         # candidates-only verify (shared batch helper): shingle ONLY docs
         # in a candidate pair — the previous inline form tokenized the
@@ -190,13 +182,7 @@ def lsh_index_refresh_sink(
         pairs = _exact_jaccard_on_candidates(
             cand, all_docs, text_col, SHINGLE_K, thr
         ).select("doc_a", "doc_b", "jaccard", "vs_existing")
-        (
-            pairs.withColumn("__batch_id", F.lit(batch_id))
-            .write.partitionBy("__batch_id")
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(pairs_dir)
-        )
+        _overwrite_batch(pairs, batch_id, pairs_dir)
         # collect_gc=False: no full driver GC on the micro-batch critical
         # path — the unpersist walk alone frees the executor blocks
         release_since(spark, pre_ids, collect_gc=False)
@@ -331,13 +317,7 @@ def write_segments(out_dir: str, encoder: SegmentEncoder | None = None, idempote
             ),
         )
         if idempotent:
-            (
-                with_key.withColumn("__batch_id", F.lit(batch_id))
-                .write.partitionBy("__batch_id", "stream_id")
-                .mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(out_dir)
-            )
+            _overwrite_batch(with_key, batch_id, out_dir, "stream_id")
         else:
             with_key.write.mode("append").parquet(out_dir)
 

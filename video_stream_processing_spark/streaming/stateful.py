@@ -575,90 +575,3 @@ def gap_stream(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# transformWithState twin (Spark 4's successor stateful API — r9)
-# ---------------------------------------------------------------------------
-
-
-def exact_segments_stream_tws(
-    frames: DataFrame,
-    duration_ms: int = 180_000,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """The SAME exact reference segment semantics
-    (first-arrival-aligned, trigger-inclusive, add-then-check —
-    VideoSegmentBuffer.java:38-105 / VideoProcessFunction.java:87-100,
-    event-time timer flushing the tail) on ``transformWithStateInPandas``
-    — Spark 4's successor to applyInPandasWithState (typed per-key value
-    state + explicit timers instead of a single state tuple + timeout
-    conf). Output-equality with the applyInPandasWithState form AND the
-    batch-exact operator is pinned in tests/test_streaming.py — SKIPPED
-    in this container because TWS ships worker-side state as protobuf
-    messages and the `protobuf` package is not installed (the same
-    environment-bound posture as onnxruntime/Kafka: the code path is
-    real, the dependency is the gap).
-
-    Input needs (stream_id, ts); emits the SEGMENT_OUT_SCHEMA rows."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class SegmentProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._buf = handle.getValueState("buf", SEGMENT_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (stream_id,) = key
-            if self._buf.exists():
-                start_ms, cnt, mn, mx = self._buf.get()
-            else:
-                start_ms, cnt, mn, mx = None, 0, None, None
-            out = []
-            pdf = pd.concat(list(rows), ignore_index=True)
-            pdf = pdf.sort_values("ts", kind="mergesort")
-            for t in (pdf["ts"].astype("int64") // 1_000_000).tolist():
-                if start_ms is None:
-                    start_ms, cnt, mn, mx = t, 1, t, t
-                    continue
-                cnt += 1
-                mn, mx = min(mn, t), max(mx, t)
-                if t - start_ms >= duration_ms:  # add-then-check, inclusive
-                    out.append((stream_id, mn, mx, cnt, "size"))
-                    start_ms, cnt, mn, mx = None, 0, None, None
-            for tm in self._handle.listTimers():
-                self._handle.deleteTimer(tm)
-            if start_ms is not None:
-                self._buf.update((start_ms, cnt, mn, mx))
-                self._handle.registerTimer(start_ms + duration_ms)
-            else:
-                self._buf.clear()
-            if out:
-                yield pd.concat(
-                    [_segment_row(s, mn_, mx_, c, why) for (s, mn_, mx_, c, why) in out],
-                    ignore_index=True,
-                )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            (stream_id,) = key
-            if self._buf.exists():
-                start_ms, cnt, mn, mx = self._buf.get()
-                self._buf.clear()
-                yield _segment_row(stream_id, mn, mx, cnt, "timeout")
-
-        def close(self) -> None:
-            pass
-
-    return (
-        frames.withWatermark("ts", watermark)
-        .groupBy("stream_id")
-        .transformWithStateInPandas(
-            statefulProcessor=SegmentProcessor(),
-            outputStructType=SEGMENT_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-    )
