@@ -85,48 +85,12 @@ def test_keyframe_gate_stateful_hot_key_chunk_invariance(spark, hot_key_frames):
     assert len(chunked) >= N_HOT // 5
 
 
-def test_keyframe_gate_arrow_twin_equivalence(spark, hot_key_frames):
-    """The Arrow-native gate (mapInArrow, no pandas conversion) must be
-    row-identical to the pandas twin, including state carried across
-    Arrow batch boundaries on a hot key."""
-    from video_stream_processing_spark.operators.keyframe import (
-        keyframe_gate_stateful,
-        keyframe_gate_stateful_arrow,
-    )
-
-    frames = hot_key_frames.limit(50_000)
-    old = spark.conf.get(BATCH, "10000")
-    try:
-        _with_batch_size(spark, 7_777)
-        pandas_rows = sorted(
-            map(
-                tuple,
-                keyframe_gate_stateful(frames, signal_col="scene_signal").collect(),
-            )
-        )
-        arrow_rows = sorted(
-            map(
-                tuple,
-                keyframe_gate_stateful_arrow(
-                    frames, signal_col="scene_signal"
-                ).collect(),
-            )
-        )
-    finally:
-        spark.conf.set(BATCH, old)
-    assert pandas_rows == arrow_rows
-    assert len(arrow_rows) >= 50_000 // 5
-
-
-def test_fused_bytes_gate_arrow_twin_equivalence(spark):
-    """The Arrow-native fused gate (offsets-buffer histograms, no
-    per-row bytes objects) must match the pandas fused gate exactly —
-    including NULL payloads (decode-failure semantics) and state carry
-    across batch boundaries."""
-    from video_stream_processing_spark.operators.scene import (
-        keyframe_gate_from_bytes,
-        keyframe_gate_from_bytes_arrow,
-    )
+def test_fused_bytes_gate_multi_key_chunk_invariance(spark):
+    """The one bytes gate (mapInArrow) gives the same keeps in 611-row
+    chunks as in a single chunk, with three keys interleaved in every
+    chunk (key changes inside a chunk) and NULL payloads
+    (decode-failure semantics) carried across chunk boundaries."""
+    from video_stream_processing_spark.operators.scene import keyframe_gate_from_bytes
 
     n = 20_000
     frames = spark.range(n).select(
@@ -149,14 +113,13 @@ def test_fused_bytes_gate_arrow_twin_equivalence(spark):
     old = spark.conf.get(BATCH, "10000")
     try:
         _with_batch_size(spark, 611)
-        pandas_rows = sorted(map(tuple, keyframe_gate_from_bytes(frames).collect()))
-        arrow_rows = sorted(
-            map(tuple, keyframe_gate_from_bytes_arrow(frames).collect())
-        )
+        chunked = sorted(map(tuple, keyframe_gate_from_bytes(frames).collect()))
+        _with_batch_size(spark, n + 1)
+        single = sorted(map(tuple, keyframe_gate_from_bytes(frames).collect()))
     finally:
         spark.conf.set(BATCH, old)
-    assert pandas_rows == arrow_rows
-    assert len(arrow_rows) >= n // 5
+    assert chunked == single
+    assert len(chunked) >= n // 5
 
 
 def test_keyed_scans_multiple_keys_cross_chunk(spark):
@@ -181,7 +144,7 @@ def test_keyed_scans_multiple_keys_cross_chunk(spark):
 
 def test_fused_bytes_gate_hot_key_chunk_invariance(spark):
     """The round-6 FUSED gate (histogram + correlation + recurrence in
-    one mapInPandas) carries (prev_hist, last_kept_ms) across Arrow
+    one mapInArrow) carries (prev_hist, last_kept_ms) across Arrow
     chunk boundaries: a hot key spanning many chunks must produce
     byte-identical keeps to single-chunk processing, including scene
     cuts planted exactly at chunk edges."""
@@ -210,3 +173,27 @@ def test_fused_bytes_gate_hot_key_chunk_invariance(spark):
     # interval rule keeps every 5th second at minimum; content flips add
     # scene keeps between interval picks
     assert len(chunked) >= n // 5
+
+
+@pytest.mark.parametrize(
+    "name, boundary",
+    [
+        ("a08_segment_windows_exact", "MapInPandas"),
+        ("a09_keyframe_gate_exact", "MapInPandas"),
+        ("a10_keyframes_from_bytes", "MapInArrow"),
+    ],
+)
+def test_keyed_scan_python_boundary(spark, sf_dir, name, boundary):
+    """Each recurrence has one batch form, on the Python boundary that
+    measured faster for it (SCALE.md): pandas for the primitive-column
+    scans, Arrow for the binary-payload gate. Explain only; each plan
+    keeps its one keyed Exchange."""
+    from video_stream_processing_spark.plans.registry import query_map
+
+    qe = query_map()[name](spark, sf_dir)._jdf.queryExecution()
+    plan = qe.explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    other = "MapInArrow" if boundary == "MapInPandas" else "MapInPandas"
+    assert f"{boundary} (" in plan and f"{other} (" not in plan
+    assert plan.count("Exchange (") == 1

@@ -52,39 +52,18 @@ def _expected_keyframes(n=30, cut=12, interval_s=5):
     return [BASE_MS + t * 1000 for t in kept]
 
 
-def test_hist_correlation_math(spark):
-    from video_stream_processing_spark.operators.scene import hist_correlation
+def test_hist_correlation_math():
+    from video_stream_processing_spark.operators.scene import _np_hist_correlation
 
-    df = spark.createDataFrame(
-        [
-            ([0.5, 0.5, 0.0, 0.0], [0.5, 0.5, 0.0, 0.0]),  # identical -> 1
-            ([0.5, 0.5, 0.0, 0.0], [0.0, 0.0, 0.5, 0.5]),  # disjoint -> -1
-            ([0.25, 0.25, 0.25, 0.25], [0.25, 0.25, 0.25, 0.25]),  # zero var, equal -> 1
-            ([0.25, 0.25, 0.25, 0.25], [0.5, 0.5, 0.0, 0.0]),  # zero var, differ -> 0
-        ],
-        "a array<double>, b array<double>",
-    )
-    got = [r[0] for r in df.select(hist_correlation(F.col("a"), F.col("b"))).collect()]
-    assert got[0] == pytest.approx(1.0)
-    assert got[1] == pytest.approx(-1.0)
-    assert got[2] == pytest.approx(1.0)
-    assert got[3] == pytest.approx(0.0)
-
-
-def test_with_scene_similarity_values(spark, planted_cut_rows):
-    from video_stream_processing_spark.operators.scene import with_scene_similarity
-
-    out = (
-        with_scene_similarity(_frames(spark, planted_cut_rows))
-        .orderBy("ts")
-        .collect()
-    )
-    assert "frame_data" not in out[0].asDict()  # binary projected away
-    sims = [r["scene_sim"] for r in out]
-    assert sims[0] is None  # no predecessor
-    within = sims[1:12] + sims[13:]
-    assert all(s > 0.9 for s in within)  # same scene: near-perfect correlation
-    assert sims[12] < 0.5  # the cut: disjoint byte ranges
+    cases = [
+        ([0.5, 0.5, 0.0, 0.0], [0.5, 0.5, 0.0, 0.0], 1.0),  # identical
+        ([0.5, 0.5, 0.0, 0.0], [0.0, 0.0, 0.5, 0.5], -1.0),  # disjoint
+        ([0.25, 0.25, 0.25, 0.25], [0.25, 0.25, 0.25, 0.25], 1.0),  # zero var, equal
+        ([0.25, 0.25, 0.25, 0.25], [0.5, 0.5, 0.0, 0.0], 0.0),  # zero var, differ
+    ]
+    for x, y, expect in cases:
+        got = _np_hist_correlation(np.array(x), np.array(y))
+        assert got == pytest.approx(expect)
 
 
 def test_keyframe_gate_from_bytes_planted_cuts(spark, planted_cut_rows):
@@ -108,22 +87,23 @@ def test_gate_undecodable_frames_fall_back_to_interval(spark):
     assert kept_ms == [BASE_MS, BASE_MS + 5_000, BASE_MS + 10_000]
 
 
-def test_streaming_bytes_gate_matches_batch(spark, planted_cut_rows, tmp_path):
-    from video_stream_processing_spark.operators.scene import keyframe_gate_from_bytes
+def _stream_gate(spark, rows, tmp_path, name, **kw):
+    """Run keyframes_from_bytes_stream over ``rows`` to completion and
+    return its output rows in ts order."""
     from video_stream_processing_spark.streaming.stateful import (
         keyframes_from_bytes_stream,
     )
 
-    d = str(tmp_path / "frames")
-    _frames(spark, planted_cut_rows).coalesce(1).write.mode("overwrite").parquet(d)
+    d = str(tmp_path / name)
+    _frames(spark, rows).coalesce(1).write.mode("overwrite").parquet(d)
     stream = spark.readStream.schema(
         "stream_id string, ts timestamp, frame_data binary"
     ).parquet(d)
     q = (
-        keyframes_from_bytes_stream(stream)
+        keyframes_from_bytes_stream(stream, **kw)
         .writeStream.format("memory")
-        .queryName("kf_bytes")
-        .option("checkpointLocation", str(tmp_path / "ck"))
+        .queryName(name)
+        .option("checkpointLocation", str(tmp_path / f"{name}_ck"))
         .outputMode("append")
         .start()
     )
@@ -131,10 +111,19 @@ def test_streaming_bytes_gate_matches_batch(spark, planted_cut_rows, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    got = {
-        int(r["ts"].timestamp() * 1000)
-        for r in spark.sql("SELECT * FROM kf_bytes WHERE is_keyframe").collect()
-    }
+    return spark.sql(f"SELECT * FROM {name} ORDER BY ts").collect()
+
+
+def test_streaming_bytes_gate_matches_batch(spark, planted_cut_rows, tmp_path):
+    from video_stream_processing_spark.operators.scene import keyframe_gate_from_bytes
+
+    out = _stream_gate(spark, planted_cut_rows, tmp_path, "kf_bytes")
+    sims = [r["scene_sim"] for r in out]
+    assert sims[0] is None  # no predecessor
+    within = sims[1:12] + sims[13:]
+    assert all(s > 0.9 for s in within)  # same scene: near-perfect correlation
+    assert sims[12] < 0.5  # the cut: disjoint byte ranges
+    got = {int(r["ts"].timestamp() * 1000) for r in out if r["is_keyframe"]}
     batch = {
         int(r["ts"].timestamp() * 1000)
         for r in keyframe_gate_from_bytes(_frames(spark, planted_cut_rows)).collect()
@@ -142,15 +131,47 @@ def test_streaming_bytes_gate_matches_batch(spark, planted_cut_rows, tmp_path):
     assert got == batch == set(_expected_keyframes())
 
 
-def test_byte_histogram_normalized(spark):
-    from video_stream_processing_spark.operators.scene import byte_histogram_udf
+def test_decoded_gate_on_png_frames(spark, tmp_path):
+    """Decoded mode on entropy-coded frames: each PNG's pixels are the
+    planted-cut pattern (gray, so luminance == pixel value), but its
+    payload bytes are deflate output. The batch and streaming gates must
+    both keep exactly the reference recurrence's frames."""
+    import pyarrow as pa
 
-    df = spark.createDataFrame(
-        [(bytes([0, 0, 1, 255]),), (b"",), (None,)], "payload binary"
+    from video_stream_processing_spark.functions.pngcodec import encode_png
+    from video_stream_processing_spark.operators.scene import (
+        _arrow_byte_histograms,
+        _np_hist_correlation,
+        keyframe_gate_from_bytes,
     )
-    h0, h_empty, h_null = [
-        r[0] for r in df.select(byte_histogram_udf()(F.col("payload"))).collect()
-    ]
+
+    def png(scene, t):
+        gray = np.frombuffer(_scene_payload(scene, t), dtype=np.uint8).reshape(16, 16)
+        return encode_png(np.repeat(gray[:, :, None], 3, axis=2))
+
+    rows = [("cam", BASE_MS + t * 1000, png(0 if t < 12 else 1, t)) for t in range(30)]
+    # raw byte histograms miss this cut, so only decoded mode can keep t=12
+    pre, post = _arrow_byte_histograms(pa.array([rows[11][2], rows[12][2]], pa.binary()))
+    assert _np_hist_correlation(pre, post) > 0.7
+    batch = sorted(
+        int(r["ts"].timestamp() * 1000)
+        for r in keyframe_gate_from_bytes(
+            _frames(spark, rows), histogram="decoded"
+        ).collect()
+    )
+    assert batch == _expected_keyframes()
+    out = _stream_gate(spark, rows, tmp_path, "kf_decoded", histogram="decoded")
+    assert [int(r["ts"].timestamp() * 1000) for r in out if r["is_keyframe"]] == batch
+
+
+def test_byte_histogram_normalized():
+    import pyarrow as pa
+
+    from video_stream_processing_spark.operators.scene import _arrow_byte_histograms
+
+    h0, h_empty, h_null = _arrow_byte_histograms(
+        pa.array([bytes([0, 0, 1, 255]), b"", None], pa.binary())
+    )
     assert h_empty is None and h_null is None
     arr = np.asarray(h0)
     assert arr.shape == (256,)
@@ -158,32 +179,21 @@ def test_byte_histogram_normalized(spark):
     assert arr[255] == pytest.approx(0.25) and arr.sum() == pytest.approx(1.0)
 
 
-def test_np_correlation_matches_jvm_hist_correlation(spark):
-    """The fused gate's numpy correlation twin must agree with the JVM
-    hist_correlation on random normalized histograms to well inside the
-    gate's threshold margins (sub-ulp summation-order differences are
-    the only permitted divergence), and on both zero-variance edge
-    cases."""
-    import numpy as np
-
-    from video_stream_processing_spark.operators.scene import (
-        _np_hist_correlation,
-        hist_correlation,
-    )
+def test_np_correlation_matches_jvm_hist_correlation():
+    """The gates' correlation kernel must agree with numpy's Pearson
+    coefficient (an independent implementation) on random normalized
+    histograms to well inside the gate's threshold margins, and return
+    the OpenCV values on both zero-variance edge cases, where
+    ``np.corrcoef`` is undefined."""
+    from video_stream_processing_spark.operators.scene import _np_hist_correlation
 
     rng = np.random.RandomState(42)
-    pairs = []
     for _ in range(50):
         a = rng.rand(256)
         b = rng.rand(256)
         a, b = a / a.sum(), b / b.sum()
-        pairs.append((list(map(float, a)), list(map(float, b))))
-    flat = [0.00390625] * 256  # 1/256: zero variance
-    pairs.append((flat, flat))  # equal -> 1.0
-    pairs.append((flat, list(map(float, np.arange(256) / np.arange(256).sum()))))
-
-    df = spark.createDataFrame(pairs, "a array<double>, b array<double>")
-    jvm = [r[0] for r in df.select(hist_correlation(F.col("a"), F.col("b"))).collect()]
-    for (a, b), expect in zip(pairs, jvm):
-        got = _np_hist_correlation(np.array(a), np.array(b))
-        assert got == pytest.approx(expect, abs=1e-9)
+        expect = np.corrcoef(a, b)[0, 1]
+        assert _np_hist_correlation(a, b) == pytest.approx(expect, abs=1e-9)
+    flat = np.full(256, 0.00390625)  # 1/256: zero variance
+    assert _np_hist_correlation(flat, flat) == 1.0
+    assert _np_hist_correlation(flat, np.arange(256) / np.arange(256).sum()) == 0.0

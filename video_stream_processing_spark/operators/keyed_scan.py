@@ -6,28 +6,23 @@ task. The scalable shape for per-key sequential recurrences is:
 
     repartition(key)                  # one hash shuffle, same as groupBy
       .sortWithinPartitions(key, ts)  # external sort, spills to disk
-      .mapInPandas(scan_fn)           # Arrow chunks of <= maxRecordsPerBatch
+      .mapInPandas(scan_fn)           # or mapInArrow: bounded Arrow chunks
 
-``mapInPandas`` streams each partition's rows IN ORDER as a sequence of
-bounded Arrow batches (spark.sql.execution.arrow.maxRecordsPerBatch,
-default 10k rows), so the scan carries O(keys-in-flight) state — a dict
-entry per key, never a key's whole history. Keys are contiguous after the
-sort, so state can be dropped as soon as the key changes.
+``mapInPandas``/``mapInArrow`` stream each partition's rows IN ORDER as a
+sequence of bounded Arrow batches
+(spark.sql.execution.arrow.maxRecordsPerBatch, default 10k rows), so the
+scan carries O(keys-in-flight) state — a dict entry per key, never a
+key's whole history. Keys are contiguous after the sort, so state can be
+dropped as soon as the key changes.
 
-This module hosts the one shared wrapper; the recurrence bodies live with
-their operators (keyframe gate, exact segments, scene gate).
+This module hosts the one shared shuffle + sort (``keyed_sorted``); the
+recurrence bodies live with their operators (keyframe gate, exact
+segments, scene gate), and each picks its own Python boundary.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
-
-import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame
-
-ScanFn = Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]
-ArrowScanFn = Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]
 
 
 def _scan_partitions(frames: DataFrame) -> int:
@@ -49,46 +44,18 @@ def _scan_partitions(frames: DataFrame) -> int:
         return frames.sparkSession.sparkContext.defaultParallelism
 
 
-def keyed_sorted_scan(
+def keyed_sorted(
     frames: DataFrame,
     key_col: str,
     order_cols: tuple[str, ...],
-    scan_fn: ScanFn,
-    out_schema,
 ) -> DataFrame:
-    """Hash-partition on ``key_col``, sort each partition by
-    (key, *order_cols), stream bounded Arrow chunks through ``scan_fn``.
+    """Hash-partition on ``key_col`` and sort each partition by
+    (key, *order_cols), ready for ``.mapInPandas(scan_fn, schema)`` or
+    ``.mapInArrow(scan_fn, schema)``.
 
     ``scan_fn`` must tolerate a key spanning multiple consecutive chunks
     (carry state) and multiple keys inside one chunk (keys arrive
     contiguously in sorted order)."""
-    return (
-        frames.repartition(_scan_partitions(frames), key_col)
-        .sortWithinPartitions(key_col, *order_cols)
-        .mapInPandas(scan_fn, schema=out_schema)
-    )
-
-
-def keyed_sorted_scan_arrow(
-    frames: DataFrame,
-    key_col: str,
-    order_cols: tuple[str, ...],
-    scan_fn: ArrowScanFn,
-    out_schema,
-) -> DataFrame:
-    """Arrow-native twin of :func:`keyed_sorted_scan` (Spark 4's
-    ``mapInArrow``): identical shuffle + external-sort shape, but
-    ``scan_fn`` consumes and produces ``pyarrow.RecordBatch`` directly —
-    the pandas Block-manager conversion on BOTH worker boundaries is
-    skipped, which is pure overhead for scan bodies that only read a few
-    primitive columns and emit a row filter/projection of the input.
-
-    Same chunking contract as the pandas form: keys arrive contiguously
-    in sorted order, a key may span consecutive batches (carry state),
-    and multiple keys may share one batch. Measured vs the pandas twin
-    in SCALE.md (keyed-scan section)."""
-    return (
-        frames.repartition(_scan_partitions(frames), key_col)
-        .sortWithinPartitions(key_col, *order_cols)
-        .mapInArrow(scan_fn, schema=out_schema)
+    return frames.repartition(_scan_partitions(frames), key_col).sortWithinPartitions(
+        key_col, *order_cols
     )

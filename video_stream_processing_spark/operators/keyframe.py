@@ -17,9 +17,10 @@ Two implementations:
   form Catalyst can optimize and the one declared queries use.
 - ``keyframe_gate_stateful``: exact reference semantics ("interval since
   the last *kept* frame"), which is inherently sequential per key. Batch
-  form uses ``applyInPandas`` per key; the streaming form lives in
-  streaming/stateful.py. Kept separate because the sequential recurrence
-  cannot be expressed with window functions.
+  form is a bounded keyed scan through ``mapInPandas``, which measured
+  faster than ``mapInArrow`` for this 3-column recurrence (SCALE.md); the
+  streaming form lives in streaming/stateful.py. Kept separate because
+  the sequential recurrence cannot be expressed with window functions.
 """
 
 from __future__ import annotations
@@ -72,7 +73,7 @@ def keyframe_gate_stateful(
     streaming/stateful.py holds the same O(1) state per key)."""
     import pandas as pd
 
-    from video_stream_processing_spark.operators.keyed_scan import keyed_sorted_scan
+    from video_stream_processing_spark.operators.keyed_scan import keyed_sorted
 
     sig = signal_col
 
@@ -108,70 +109,6 @@ def keyframe_gate_stateful(
             if len(out):
                 yield out
 
-    return keyed_sorted_scan(frames, key_col, (ts_col,), gate_scan, frames.schema)
-
-
-def keyframe_gate_stateful_arrow(
-    frames: DataFrame,
-    key_col: str = "stream_id",
-    ts_col: str = "ts",
-    signal_col: str | None = None,
-    min_interval_ms: int = 5000,
-    scene_threshold: float = 0.3,
-) -> DataFrame:
-    """Arrow-native twin of :func:`keyframe_gate_stateful` — identical
-    last-KEPT-frame recurrence (KeyFrameExtractor.java:57-61), but the
-    scan body reads ``pyarrow.RecordBatch`` columns directly and emits
-    ``RecordBatch.filter`` of the input, so neither worker boundary pays
-    the pandas Block-manager conversion (Spark 4 ``mapInArrow``). The
-    sequential per-row decision loop is unchanged — the recurrence is
-    inherently order-dependent — so the saving is exactly the
-    serialization overhead; SCALE.md records the measured delta."""
-    import pyarrow as pa
-
-    from video_stream_processing_spark.operators.keyed_scan import (
-        keyed_sorted_scan_arrow,
-    )
-
-    sig = signal_col
-
-    def gate_scan(batches):
-        state: dict = {}  # key -> (last_kept_ms, prev_sig); keys contiguous
-        current_key = None
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            cols = {name: i for i, name in enumerate(b.schema.names)}
-            keys = b.column(cols[key_col]).to_pylist()
-            # Arrow timestamps are int64 microseconds under the hood; a
-            # zero-copy cast + vectorized divide beats per-row datetime math
-            ts_ms_arr = (
-                b.column(cols[ts_col]).cast(pa.int64()).to_numpy() // 1000
-            ).tolist()
-            sigs = b.column(cols[sig]).to_pylist() if sig else [None] * b.num_rows
-            keep_mask = []
-            for k, ts_ms, s in zip(keys, ts_ms_arr, sigs):
-                if k != current_key:
-                    state.pop(current_key, None)  # sorted input: old key is done
-                    current_key = k
-                last_kept_ms, prev_sig = state.get(k, (None, None))
-                keep = False
-                if last_kept_ms is None or ts_ms - last_kept_ms >= min_interval_ms:
-                    keep = True
-                elif (
-                    sig is not None
-                    and prev_sig is not None
-                    and abs(s - prev_sig) > scene_threshold
-                ):
-                    keep = True
-                if keep:
-                    last_kept_ms = ts_ms
-                state[k] = (last_kept_ms, s)
-                keep_mask.append(keep)
-            out = b.filter(pa.array(keep_mask, type=pa.bool_()))
-            if out.num_rows:
-                yield out
-
-    return keyed_sorted_scan_arrow(
-        frames, key_col, (ts_col,), gate_scan, frames.schema
+    return keyed_sorted(frames, key_col, (ts_col,)).mapInPandas(
+        gate_scan, schema=frames.schema
     )

@@ -9,16 +9,17 @@ HISTCMP_CORREL. We implement that correlation over a 256-bin BYTE
 histogram of the payload (numpy — no cv2 in this container; for decoded
 pixel data the same math applies unchanged to a luminance histogram).
 
-Split by boundary (SURVEY.md §4.2 UDF discipline):
+One kernel per step, shared by the batch gate here and the streaming
+gate (streaming/stateful.py keyframes_from_bytes_stream):
 
-- byte histogram: Arrow-batched pandas UDF — bytes never cross a
-  shuffle; the payload column is dropped before the lag window so only
-  256-double vectors move.
-- correlation + lag: JVM-side (higher-order functions ``aggregate`` /
-  ``zip_with`` + window ``lag``) — whole-stage codegen, no Python.
-- the gate itself: recurrence on last-kept-time => bounded keyed scan
-  (operators/keyed_scan.py), or per-key state in the streaming twin
-  (streaming/stateful.py keyframes_from_bytes_stream).
+- ``_arrow_byte_histograms``: raw byte histograms of a whole Arrow
+  binary column in one bincount;
+- ``_decoded_luminance_histogram``: luminance histogram of one decoded
+  image (entropy-coded wire formats such as JPEG);
+- ``_np_hist_correlation``: HISTCMP_CORREL of two histograms.
+
+The batch gate ``keyframe_gate_from_bytes`` runs the recurrence on
+last-kept-time inside one bounded keyed scan (operators/keyed_scan.py).
 
 Semantics pinned to KeyFrameExtractor.isKeyFrame (:53-82):
 - interval rule first: ts - last_kept >= min_interval keeps and resets;
@@ -32,50 +33,24 @@ Semantics pinned to KeyFrameExtractor.isKeyFrame (:53-82):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType
+from pyspark.sql import DataFrame
 
 N_BINS = 256
 
 
-def _batch_byte_histograms(payloads: list) -> list:
-    """list of BINARY payloads -> list of 256-bin normalized numpy
-    histograms; null/empty payload -> None (decode failure marker).
-
-    One flattened bincount for the WHOLE batch instead of a per-row
-    loop: concatenate valid payloads, key each byte by
-    row_index * 256 + value, and reshape — ~6x faster on the
-    short-payload batches this path sees, with bit-identical results
-    (same int counts / float length division per row)."""
-    vals = [None if b is None else bytes(b) for b in payloads]
-    valid = [(i, b) for i, b in enumerate(vals) if b]
-    out = [None] * len(vals)
-    if valid:
-        lens = np.array([len(b) for _, b in valid], dtype=np.int64)
-        buf = np.frombuffer(b"".join(b for _, b in valid), dtype=np.uint8)
-        row_idx = np.repeat(np.arange(len(valid), dtype=np.int64), lens)
-        counts = np.bincount(
-            row_idx * N_BINS + buf, minlength=len(valid) * N_BINS
-        ).reshape(len(valid), N_BINS)
-        hists = counts / lens.astype(np.float64)[:, None]
-        for (i, _), h in zip(valid, hists):
-            out[i] = h
-    return out
-
-
 def _arrow_byte_histograms(col) -> list:
     """pyarrow Binary/LargeBinary array -> list of 256-bin normalized
-    numpy histograms; null/EMPTY payload -> None (decode-failure marker,
-    same contract as ``_batch_byte_histograms``).
+    numpy histograms; null/EMPTY payload -> None (decode-failure
+    marker).
 
-    Zero-copy twin of ``_batch_byte_histograms``: reads the Arrow value
-    buffer THROUGH the offsets buffer directly — no per-row Python
-    ``bytes`` objects exist at any point (the pandas path materializes
-    one per row just to re-concatenate them). Null slots carry equal
+    One flattened bincount for the WHOLE batch instead of a per-row
+    loop: key each byte by row_index * 256 + value and reshape. The
+    value buffer is read THROUGH the offsets buffer, so no per-row
+    Python ``bytes`` object exists at any point. Null slots carry equal
     offsets (length 0) per the Arrow spec, so they fall out of the
-    valid set with no bitmap walk."""
+    valid set with no bitmap walk. Each row's bins are its int counts
+    divided by its float length — the same IEEE division as a per-row
+    ``bincount / len``."""
     import pyarrow as pa
 
     n = len(col)
@@ -106,7 +81,14 @@ def _arrow_byte_histograms(col) -> list:
 def _decoded_luminance_histogram(b) -> np.ndarray | None:
     """One BINARY payload -> 256-bin normalized luminance histogram of
     the DECODED image; undecodable/null -> None. Integer-weight BT.601
-    (x256) keeps binning exact."""
+    (x256) keeps binning exact.
+
+    For raw containers (BMP/PPM) the byte histogram already approximates
+    the pixel distribution, but entropy-coded formats (JPEG — the
+    reference's actual wire format) look like noise under near-identical
+    headers, so the histogram must be taken AFTER decode, exactly as the
+    reference does (decoded Mat into compareHistograms —
+    KeyFrameExtractor.java:86-95)."""
     from video_stream_processing_spark.functions.imagecodec import decode_image_bgr
 
     img = decode_image_bgr(bytes(b)) if b is not None and len(b) else None
@@ -120,214 +102,13 @@ def _decoded_luminance_histogram(b) -> np.ndarray | None:
     return np.bincount(lum.ravel(), minlength=N_BINS) / float(lum.size)
 
 
-def byte_histogram_udf():
-    """payload BINARY -> ARRAY<DOUBLE> (256 normalized bins); null/empty
-    payload -> NULL (decode failure marker)."""
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def hist(payload: pd.Series) -> pd.Series:
-        return pd.Series(_batch_byte_histograms(list(payload)), dtype=object)
-
-    return hist
-
-
-def decoded_histogram_udf():
-    """payload BINARY -> ARRAY<DOUBLE> (256 normalized luminance bins of
-    the DECODED image); undecodable/null payload -> NULL.
-
-    The compressed-format twin of ``byte_histogram_udf``: for raw
-    containers (BMP/PPM) the byte histogram already approximates the
-    pixel distribution, but for entropy-coded formats (JPEG — the
-    reference's actual wire format) compressed bytes look like noise
-    under near-identical headers, so the histogram must be taken AFTER
-    decode, exactly as the reference does (decoded Mat into
-    compareHistograms — KeyFrameExtractor.java:86-95). Decoding runs in
-    the same Arrow batch; bytes still never cross a shuffle."""
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def hist(payload: pd.Series) -> pd.Series:
-        return pd.Series(
-            [_decoded_luminance_histogram(b) for b in payload], dtype=object
-        )
-
-    return hist
-
-
-def hist_correlation(
-    a: Column,
-    b: Column,
-    mean_a: Column | None = None,
-    mean_b: Column | None = None,
-    var_a: Column | None = None,
-    var_b: Column | None = None,
-) -> Column:
-    """OpenCV HISTCMP_CORREL, JVM-side:
-    sum((a-ma)(b-mb)) / sqrt(sum((a-ma)^2) * sum((b-mb)^2)); zero
-    variance on either side -> 1.0 iff the histograms are identical else
-    0.0. Stays inside codegen (aggregate/zip_with; no Python).
-
-    Pass precomputed ``mean_a``/``mean_b`` COLUMN references when calling
-    inside a plan (with_scene_similarity does): inlining the mean
-    expression makes Catalyst re-evaluate the O(n) aggregate inside every
-    lambda element — O(n^2) per row — and duplicates the whole ``b``
-    window expression per use."""
-    ma = (
-        mean_a
-        if mean_a is not None
-        else F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x) / F.size(a).cast("double")
-    )
-    mb = (
-        mean_b
-        if mean_b is not None
-        else F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x) / F.size(b).cast("double")
-    )
-    num = F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - ma) * (y - mb)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    va = (
-        var_a
-        if var_a is not None
-        else F.aggregate(a, F.lit(0.0), lambda acc, x: acc + (x - ma) * (x - ma))
-    )
-    vb = (
-        var_b
-        if var_b is not None
-        else F.aggregate(b, F.lit(0.0), lambda acc, x: acc + (x - mb) * (x - mb))
-    )
-    den = F.sqrt(va * vb)
-    return F.when(den > 0, num / den).otherwise(
-        F.when(a == b, F.lit(1.0)).otherwise(F.lit(0.0))
-    )
-
-
-def with_scene_similarity(
-    frames: DataFrame,
-    payload_col: str = "frame_data",
-    key_col: str = "stream_id",
-    ts_col: str = "ts",
-    drop_payload: bool = True,
-    histogram: str = "bytes",
-) -> DataFrame:
-    """Add ``scene_sim``: correlation of each frame's histogram with its
-    predecessor's (per key, ts order). NULL when the frame has no
-    predecessor; 1.0 when either side is undecodable (reference
-    semantics). One shuffle (the lag window); the binary column is
-    projected away before it so only 256-double vectors shuffle.
-
-    ``histogram``: 'bytes' (raw payload bytes — exact and cheap for
-    uncompressed containers, and SQL-modelable so a10's oracle covers
-    it) or 'decoded' (luminance of the decoded image — required for
-    entropy-coded formats like the reference's JPEG wire payload)."""
-    w = Window.partitionBy(key_col).orderBy(ts_col)
-    hist = byte_histogram_udf() if histogram == "bytes" else decoded_histogram_udf()
-    df = frames.withColumn("__h", hist(F.col(payload_col)))
-    if drop_payload:
-        df = df.drop(payload_col)
-    # Materialize the lagged histogram and both means as columns FIRST:
-    # one lag window expression total, and each O(n) mean evaluated once
-    # per row instead of inside every HOF lambda element (the inlined
-    # form costs O(n^2)/row and 11 duplicate lag(__h) copies — seen in
-    # the formatted plan before this hoist).
-    # Each row folds its OWN mean and variance once; the predecessor's
-    # stats come back through lag() — bit-identical to re-folding the
-    # lagged array (same fold over the same values, computed when that
-    # row was current) but 2 of 5 O(n) folds per row disappear, and the
-    # lag window ships 2 extra doubles instead of re-evaluating 512
-    # interpreted lambda elements per row.
-    df = (
-        df.withColumn(
-            "__ma",
-            F.aggregate("__h", F.lit(0.0), lambda acc, x: acc + x)
-            / F.size("__h").cast("double"),
-        )
-        .withColumn(
-            "__va",
-            F.aggregate(
-                "__h",
-                F.lit(0.0),
-                lambda acc, x: acc + (x - F.col("__ma")) * (x - F.col("__ma")),
-            ),
-        )
-        .withColumn("__ph", F.lag("__h").over(w))
-        .withColumn("__has_prev", F.lag(ts_col).over(w).isNotNull())
-        .withColumn("__mb", F.lag("__ma").over(w))
-        .withColumn("__vb", F.lag("__va").over(w))
-    )
-    sim = (
-        F.when(~F.col("__has_prev"), F.lit(None).cast("double"))
-        .when(F.col("__h").isNull() | F.col("__ph").isNull(), F.lit(1.0))
-        .otherwise(
-            hist_correlation(
-                F.col("__h"),
-                F.col("__ph"),
-                mean_a=F.col("__ma"),
-                mean_b=F.col("__mb"),
-                var_a=F.col("__va"),
-                var_b=F.col("__vb"),
-            )
-        )
-    )
-    return df.withColumn("scene_sim", sim).drop(
-        "__h", "__ph", "__has_prev", "__ma", "__mb", "__va", "__vb"
-    )
-
-
-def keyframe_gate_from_similarity(
-    frames: DataFrame,
-    key_col: str = "stream_id",
-    ts_col: str = "ts",
-    sim_col: str = "scene_sim",
-    min_interval_ms: int = 5_000,
-    scene_threshold: float = 0.3,
-) -> DataFrame:
-    """Exact isKeyFrame recurrence driven by a precomputed similarity
-    column: keep iff >= min_interval since last KEPT frame, else iff
-    similarity < (1 - threshold). Bounded keyed scan (state: one long per
-    key)."""
-    from video_stream_processing_spark.operators.keyed_scan import keyed_sorted_scan
-
-    cut = 1.0 - scene_threshold
-
-    def gate_scan(chunks):
-        state: dict = {}
-        current_key = None
-        for pdf in chunks:
-            if len(pdf) == 0:
-                continue
-            keys = pdf[key_col].tolist()
-            ts_ms_arr = (pdf[ts_col].astype("int64") // 1_000_000).tolist()
-            sims = pdf[sim_col].tolist()
-            keep_mask = []
-            for k, ts_ms, sim in zip(keys, ts_ms_arr, sims):
-                if k != current_key:
-                    state.pop(current_key, None)
-                    current_key = k
-                last_kept_ms = state.get(k)
-                keep = False
-                if last_kept_ms is None or ts_ms - last_kept_ms >= min_interval_ms:
-                    keep = True
-                elif sim is not None and not pd.isna(sim) and sim < cut:
-                    keep = True
-                if keep:
-                    state[k] = ts_ms
-                keep_mask.append(keep)
-            out = pdf[pd.Series(keep_mask, index=pdf.index)]
-            if len(out):
-                yield out
-        return
-
-    return keyed_sorted_scan(frames, key_col, (ts_col,), gate_scan, frames.schema)
-
-
 def _np_hist_correlation(a: np.ndarray, b: np.ndarray) -> float:
-    """numpy twin of ``hist_correlation`` (OpenCV HISTCMP_CORREL):
+    """OpenCV HISTCMP_CORREL:
     sum((a-ma)(b-mb)) / sqrt(sum((a-ma)^2) * sum((b-mb)^2)); zero
     variance on either side -> 1.0 iff identical else 0.0. Summation
-    order differs from the JVM fold only at sub-ulp level — the gate's
+    order differs from a SQL fold only at sub-ulp level — the gate's
     thresholds carry wide margins by construction (a10's oracle
-    docstring), so a keep decision never flips."""
+    comment), so a keep decision never flips."""
     ma = a.sum() / a.size
     mb = b.sum() / b.size
     da = a - ma
@@ -348,49 +129,59 @@ def keyframe_gate_from_bytes(
     histogram: str = "bytes",
 ) -> DataFrame:
     """End-to-end binary-driven gate, FUSED into one Arrow pass: payload
-    bytes -> histogram (raw or decoded) -> consecutive-frame correlation
-    -> exact keyframe recurrence, all inside a single bounded keyed scan.
+    bytes -> histogram -> consecutive-frame correlation -> exact
+    keyframe recurrence, all inside a single bounded keyed scan.
 
     Physical shape: ONE hash shuffle on the stream key (the same
     keyBy(streamId) ship the reference pays,
     VideoStreamProcessingJob.java:151), one external sort, one
-    mapInPandas. The pre-r6 chain (pre-shuffle histogram UDF -> lag
-    window -> separate gate scan) paid TWO Python boundary crossings and
-    two hash exchanges for the same answer; fusing halves both — the
-    histogram is per-row, so it computes equally well after the sort,
-    and the previous-frame histogram rides in the scan's O(keys-in-
-    flight) state instead of a window lag. The payload column never
-    appears in the OUTPUT schema (dropped inside the scan), so binary
-    leaves the plan at the Python boundary.
+    mapInArrow. The histogram is per-row, so it computes after the
+    sort, and the previous-frame histogram rides in the scan's
+    O(keys-in-flight) state instead of a window lag. The payload column
+    never appears in the OUTPUT schema (dropped inside the scan), so
+    binary leaves the plan at the Python boundary. The scan reads and
+    emits ``pyarrow.RecordBatch`` directly, which measured 1.14x faster
+    than the pandas form for a binary payload (SCALE.md).
 
-    Semantics identical to with_scene_similarity +
-    keyframe_gate_from_similarity (KeyFrameExtractor.java:53-82):
-    interval rule first; scene rule only with a predecessor; decode
-    failure on either side -> similarity 1.0; the previous-frame
-    pointer advances EVERY row, kept or not."""
+    ``histogram``: 'bytes' (raw payload bytes — exact and cheap for
+    uncompressed containers, and SQL-modelable so a10's oracle covers
+    it) or 'decoded' (luminance of the decoded image — required for
+    entropy-coded formats like the reference's JPEG wire payload).
+
+    Semantics (KeyFrameExtractor.java:53-82): interval rule first; scene
+    rule only with a predecessor; decode failure on either side ->
+    similarity 1.0; the previous-frame pointer advances EVERY row, kept
+    or not."""
+    import pyarrow as pa
+
     from pyspark.sql.types import StructType
 
-    from video_stream_processing_spark.operators.keyed_scan import keyed_sorted_scan
+    from video_stream_processing_spark.operators.keyed_scan import keyed_sorted
 
     cut = 1.0 - scene_threshold
     decoded = histogram == "decoded"
     out_schema = StructType([f for f in frames.schema.fields if f.name != payload_col])
 
-    def fused_scan(chunks):
+    def fused_scan(batches):
         # key -> (prev_hist | None, last_kept_ms); keys are contiguous
         # after the sort, so state drops as soon as the key changes.
         state: dict = {}
         current_key = None
-        for pdf in chunks:
-            if len(pdf) == 0:
+        for b in batches:
+            if b.num_rows == 0:
                 continue
-            keys = pdf[key_col].tolist()
-            ts_ms_arr = (pdf[ts_col].astype("int64") // 1_000_000).tolist()
-            payloads = pdf[payload_col].tolist()
+            cols = {name: i for i, name in enumerate(b.schema.names)}
+            keys = b.column(cols[key_col]).to_pylist()
+            # Arrow timestamps are int64 microseconds under the hood; a
+            # zero-copy cast + vectorized divide beats per-row datetime math
+            ts_ms_arr = (
+                b.column(cols[ts_col]).cast(pa.int64()).to_numpy() // 1000
+            ).tolist()
+            payloads = b.column(cols[payload_col])
             if decoded:
-                hists = [_decoded_luminance_histogram(b) for b in payloads]
+                hists = [_decoded_luminance_histogram(p) for p in payloads.to_pylist()]
             else:
-                hists = _batch_byte_histograms(payloads)
+                hists = _arrow_byte_histograms(payloads)
             keep_mask = []
             for k, ts_ms, h in zip(keys, ts_ms_arr, hists):
                 if k != current_key:
@@ -415,82 +206,12 @@ def keyframe_gate_from_bytes(
                     keep = True
                 state[k] = (h, ts_ms if keep else last_kept_ms)
                 keep_mask.append(keep)
-            out = pdf[pd.Series(keep_mask, index=pdf.index)].drop(columns=[payload_col])
-            if len(out):
-                yield out
-        return
-
-    return keyed_sorted_scan(frames, key_col, (ts_col,), fused_scan, out_schema)
-
-
-def keyframe_gate_from_bytes_arrow(
-    frames: DataFrame,
-    payload_col: str = "frame_data",
-    key_col: str = "stream_id",
-    ts_col: str = "ts",
-    min_interval_ms: int = 5_000,
-    scene_threshold: float = 0.3,
-) -> DataFrame:
-    """Arrow-native twin of :func:`keyframe_gate_from_bytes` (raw byte
-    histogram mode): same ONE-shuffle fused plan, but the scan body is
-    ``mapInArrow`` and the histogram pass reads the Arrow binary column
-    THROUGH its offsets buffer (``_arrow_byte_histograms``) — per-row
-    Python ``bytes`` objects never exist, and the pandas Block-manager
-    conversion is skipped on both worker boundaries. Recurrence
-    semantics identical (KeyFrameExtractor.java:53-82); equivalence +
-    chunk-boundary carry pinned in tests/test_keyed_scan.py; measured
-    delta in SCALE.md."""
-    import pyarrow as pa
-
-    from pyspark.sql.types import StructType
-
-    from video_stream_processing_spark.operators.keyed_scan import (
-        keyed_sorted_scan_arrow,
-    )
-
-    cut = 1.0 - scene_threshold
-    out_schema = StructType([f for f in frames.schema.fields if f.name != payload_col])
-
-    def fused_scan(batches):
-        state: dict = {}  # key -> (prev_hist | None, last_kept_ms)
-        current_key = None
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            cols = {name: i for i, name in enumerate(b.schema.names)}
-            keys = b.column(cols[key_col]).to_pylist()
-            ts_ms_arr = (
-                b.column(cols[ts_col]).cast(pa.int64()).to_numpy() // 1000
-            ).tolist()
-            hists = _arrow_byte_histograms(b.column(cols[payload_col]))
-            keep_mask = []
-            for k, ts_ms, h in zip(keys, ts_ms_arr, hists):
-                if k != current_key:
-                    state.pop(current_key, None)
-                    current_key = k
-                st = state.get(k)
-                if st is None:
-                    prev_h, last_kept_ms, has_prev = None, None, False
-                else:
-                    prev_h, last_kept_ms = st
-                    has_prev = True
-                if not has_prev:
-                    sim = None
-                elif h is None or prev_h is None:
-                    sim = 1.0  # decode failure: assume similar
-                else:
-                    sim = _np_hist_correlation(h, prev_h)
-                keep = False
-                if last_kept_ms is None or ts_ms - last_kept_ms >= min_interval_ms:
-                    keep = True
-                elif sim is not None and sim < cut:
-                    keep = True
-                state[k] = (h, ts_ms if keep else last_kept_ms)
-                keep_mask.append(keep)
             out = b.select([n for n in b.schema.names if n != payload_col]).filter(
                 pa.array(keep_mask, type=pa.bool_())
             )
             if out.num_rows:
                 yield out
 
-    return keyed_sorted_scan_arrow(frames, key_col, (ts_col,), fused_scan, out_schema)
+    return keyed_sorted(frames, key_col, (ts_col,)).mapInArrow(
+        fused_scan, schema=out_schema
+    )

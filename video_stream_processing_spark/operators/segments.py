@@ -79,7 +79,7 @@ def segment_windows_exact(
     import numpy as np
     import pandas as pd
 
-    from video_stream_processing_spark.operators.keyed_scan import keyed_sorted_scan
+    from video_stream_processing_spark.operators.keyed_scan import keyed_sorted
 
     out_schema = (
         f"{key_col} string, start_time timestamp, end_time timestamp, "
@@ -156,4 +156,6 @@ def segment_windows_exact(
         if tails:
             yield _frame(tails)
 
-    return keyed_sorted_scan(frames, key_col, (ts_col,), segment_scan, out_schema)
+    return keyed_sorted(frames, key_col, (ts_col,)).mapInPandas(
+        segment_scan, schema=out_schema
+    )

@@ -612,15 +612,12 @@ def a10_keyframes_from_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear RECURSIVE CTE (round-4 upgrade from rows-only); the kept
     rows project (stream_id, ts, n_bytes) so the value hash is
     binary-free. Planted-cut + streaming-twin tests in
-    tests/test_scene.py. Uses the ARROW-native fused scan
-    (keyframe_gate_from_bytes_arrow): histograms read the Arrow binary
-    column through its offsets buffer, so per-row Python bytes objects
-    never exist — measured 1.14x over the pandas fused form
-    (tools/arrow_scan_bench.py; equivalence pinned in
+    tests/test_scene.py. The fused scan is Arrow-native (mapInArrow):
+    histograms read the Arrow binary column through its offsets buffer,
+    so per-row Python bytes objects never exist — measured 1.14x over
+    the former pandas form (SCALE.md; chunk carry pinned in
     tests/test_keyed_scan.py)."""
-    from video_stream_processing_spark.operators.scene import (
-        keyframe_gate_from_bytes_arrow as keyframe_gate_from_bytes,
-    )
+    from video_stream_processing_spark.operators.scene import keyframe_gate_from_bytes
 
     events = load_table(spark, sf_dir, "events")
     frames = events.select(

@@ -174,48 +174,21 @@ def keyframe_bytes_stateful_fn(
     KeyFrameExtractor.java:31,81) plus lastKeyFrameTime. Semantics match
     operators/scene.py (interval rule first; scene rule when similarity
     < 1 - threshold; undecodable frames assume similarity 1.0).
-    ``histogram`` mirrors with_scene_similarity: 'bytes' (raw payload)
-    or 'decoded' (luminance of the decoded image — required for
-    entropy-coded wire formats like the reference's JPEG)."""
+    ``histogram`` mirrors operators/scene.py keyframe_gate_from_bytes:
+    'bytes' (raw payload) or 'decoded' (luminance of the decoded image —
+    required for entropy-coded wire formats like the reference's JPEG).
+    The histogram and correlation kernels are scene.py's, so batch and
+    stream compute bit-identical similarities."""
     import numpy as np
+    import pyarrow as pa
 
-    from video_stream_processing_spark.operators.scene import N_BINS
+    from video_stream_processing_spark.operators.scene import (
+        _arrow_byte_histograms,
+        _decoded_luminance_histogram,
+        _np_hist_correlation,
+    )
 
     cut = 1.0 - scene_threshold
-
-    if histogram == "bytes":
-
-        def _hist(b):
-            if b is None or len(b) == 0:
-                return None
-            arr = np.frombuffer(bytes(b), dtype=np.uint8)
-            return np.bincount(arr, minlength=N_BINS) / float(len(arr))
-
-    else:
-
-        def _hist(b):
-            from video_stream_processing_spark.functions.imagecodec import (
-                decode_image_bgr,
-            )
-
-            img = decode_image_bgr(bytes(b)) if b is not None and len(b) else None
-            if img is None:
-                return None
-            lum = (
-                77 * img[:, :, 2].astype(np.uint32)
-                + 150 * img[:, :, 1].astype(np.uint32)
-                + 29 * img[:, :, 0].astype(np.uint32)
-            ) >> 8
-            return np.bincount(lum.ravel(), minlength=N_BINS) / float(lum.size)
-
-    def _corr(h1, h2) -> float:
-        if h1 is None or h2 is None:
-            return 1.0  # decode failure -> assume similar (:94,107)
-        d1, d2 = h1 - h1.mean(), h2 - h2.mean()
-        den = float(np.sqrt((d1 * d1).sum() * (d2 * d2).sum()))
-        if den <= 0.0:
-            return 1.0 if np.array_equal(h1, h2) else 0.0
-        return float((d1 * d2).sum() / den)
 
     def fn(
         key: tuple,
@@ -233,10 +206,18 @@ def keyframe_bytes_stateful_fn(
             last_kf_ms, prev_hist, has_prev = None, None, False
         rows = pd.concat(list(pdfs), ignore_index=True).sort_values("ts", kind="mergesort")
         ts_ms = (rows["ts"].astype("int64") // 1_000_000).tolist()
+        if histogram == "bytes":
+            hists = _arrow_byte_histograms(pa.array(rows["frame_data"], pa.binary()))
+        else:
+            hists = [_decoded_luminance_histogram(b) for b in rows["frame_data"]]
         sims, flags = [], []
-        for t, payload in zip(ts_ms, rows["frame_data"]):
-            h = _hist(payload)
-            sim = _corr(h, prev_hist) if has_prev else None
+        for t, h in zip(ts_ms, hists):
+            if not has_prev:
+                sim = None
+            elif h is None or prev_hist is None:
+                sim = 1.0  # decode failure -> assume similar (:94,107)
+            else:
+                sim = _np_hist_correlation(h, prev_hist)
             keep = False
             if last_kf_ms is None or t - last_kf_ms >= min_interval_ms:
                 keep = True
