@@ -114,15 +114,22 @@ def _stream_gate(spark, rows, tmp_path, name, **kw):
     return spark.sql(f"SELECT * FROM {name} ORDER BY ts").collect()
 
 
-def test_streaming_bytes_gate_matches_batch(spark, planted_cut_rows, tmp_path):
-    from video_stream_processing_spark.operators.scene import keyframe_gate_from_bytes
-
-    out = _stream_gate(spark, planted_cut_rows, tmp_path, "kf_bytes")
+def test_with_scene_similarity_values(spark, planted_cut_rows, tmp_path):
+    """The bytes gate's per-frame similarity column: undefined on the first
+    frame, ~1.0 within a scene, collapsed at the cut."""
+    out = _stream_gate(spark, planted_cut_rows, tmp_path, "kf_sims")
+    assert "frame_data" not in out[0].asDict()  # binary projected away
     sims = [r["scene_sim"] for r in out]
     assert sims[0] is None  # no predecessor
     within = sims[1:12] + sims[13:]
     assert all(s > 0.9 for s in within)  # same scene: near-perfect correlation
     assert sims[12] < 0.5  # the cut: disjoint byte ranges
+
+
+def test_streaming_bytes_gate_matches_batch(spark, planted_cut_rows, tmp_path):
+    from video_stream_processing_spark.operators.scene import keyframe_gate_from_bytes
+
+    out = _stream_gate(spark, planted_cut_rows, tmp_path, "kf_bytes")
     got = {int(r["ts"].timestamp() * 1000) for r in out if r["is_keyframe"]}
     batch = {
         int(r["ts"].timestamp() * 1000)
