@@ -202,7 +202,7 @@ def test_idempotent_segments_sink_replay_does_not_duplicate(spark, tmp_path):
     micro-batch duplicated segment rows. The idempotent variant must
     keep one copy per (batch_id, segment) and derive identical object
     keys on replay."""
-    from video_stream_processing_spark.streaming.sinks import write_segments_idempotent
+    from video_stream_processing_spark.streaming.sinks import write_segments
 
     batch = spark.createDataFrame(
         [
@@ -219,7 +219,7 @@ def test_idempotent_segments_sink_replay_does_not_duplicate(spark, tmp_path):
     )
 
     seg_dir = str(tmp_path / "segs")
-    sink = write_segments_idempotent(seg_dir)
+    sink = write_segments(seg_dir, idempotent=True)
     sink(batch, 3)
     sink(batch, 3)  # replay of the SAME batch id
     rows = spark.read.parquet(seg_dir).collect()

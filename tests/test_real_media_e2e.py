@@ -72,7 +72,7 @@ def test_full_job_on_real_frames(spark, tmp_path, codec):
         FFmpegEncoder,
         NoopEncoder,
         write_detections_fact_idempotent,
-        write_segments_idempotent,
+        write_segments,
     )
 
     frames = _frames_df(spark, codec)
@@ -164,7 +164,7 @@ def test_full_job_on_real_frames(spark, tmp_path, codec):
         encoder = NoopEncoder()
 
     seg_dir = str(tmp_path / "segments")
-    seg_sink = write_segments_idempotent(seg_dir, encoder)
+    seg_sink = write_segments(seg_dir, encoder, idempotent=True)
     seg_sink(segs, 0)
     seg_sink(segs, 0)  # replay
     seg_rows = spark.read.parquet(seg_dir).collect()

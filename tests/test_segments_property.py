@@ -1,8 +1,10 @@
 """Property-based tests for the exact segment recurrence (SURVEY.md §5.2):
-the searchsorted skip-scan in operators/segments.py must agree with a
-naive row-at-a-time reference model of the reference's buffer
+the searchsorted skip-scan ``segments.close_segments`` — the one close
+rule the batch scan and the stream state function both call — must agree
+with a naive row-at-a-time model of the reference's buffer
 (VideoSegmentBuffer add-then-check, trigger-inclusive) on arbitrary
-timestamp sequences — and every frame lands in exactly one segment."""
+timestamp sequences, whole or cut into stream micro-batches with state
+carried between them — and every frame lands in exactly one segment."""
 
 from __future__ import annotations
 
@@ -36,25 +38,75 @@ ts_lists = st.lists(
 ).map(sorted)
 
 
+def _segments_from_kernel(ts: list[int]) -> list[tuple[int, int, int]]:
+    """One run through close_segments, the open buffer flushed as the tail."""
+    import numpy as np
+
+    from video_stream_processing_spark.operators.segments import close_segments
+
+    closed, buf = close_segments(np.asarray(ts, dtype=np.int64), None, DUR)
+    got = [(mn, mx, cnt) for _, _, cnt, mn, mx in closed]
+    if buf is not None:
+        got.append((buf[2], buf[3], buf[1]))
+    return got
+
+
 @settings(max_examples=300, deadline=None)
 @given(ts_lists)
 def test_skip_scan_matches_naive_model(ts):
+    assert _segments_from_kernel(list(ts)) == naive_segments(list(ts))
+
+
+def stream_buffer_model(batches: list[list[int]], duration_ms: int = DUR):
+    """Row-at-a-time model of the stream state function's buffer: each
+    micro-batch is sorted, then every row is added and checked in turn
+    (add-then-check against the FIRST-ARRIVED start, min/max tracked),
+    the open buffer carried across batches. Returns the closed
+    (min, max, count) segments and the final open buffer."""
+    out = []
+    start = cnt = mn = mx = None
+    for batch in batches:
+        for t in sorted(batch):
+            if start is None:
+                start, cnt, mn, mx = t, 1, t, t
+                continue
+            cnt, mn, mx = cnt + 1, min(mn, t), max(mx, t)
+            if t - start >= duration_ms:
+                out.append((mn, mx, cnt))
+                start = cnt = mn = mx = None
+    return out, (None if start is None else (start, cnt, mn, mx))
+
+
+# Micro-batches of arbitrary sizes whose timestamps may run earlier than
+# the buffer start carried in from a previous batch (late rows the stream
+# accepts within its watermark).
+batch_lists = st.lists(
+    st.lists(st.integers(min_value=0, max_value=1_500_000), min_size=1, max_size=25),
+    min_size=1,
+    max_size=8,
+)
+
+
+@settings(max_examples=500, deadline=None)
+@given(batch_lists)
+def test_close_segments_carried_across_batches_matches_stream_model(batches):
     import numpy as np
 
-    # the vectorized kernel, exactly as in segments.segment_windows_exact
-    rows = []
-    i, n = 0, len(ts)
-    a = np.asarray(ts, dtype=np.int64)
-    while i < n:
-        j = int(np.searchsorted(a, a[i] + DUR, side="left"))
-        if j < n:
-            rows.append((i, j))
-            i = j + 1
-        else:
-            rows.append((i, n - 1))
-            break
-    got = [(int(a[s]), int(a[e]), e - s + 1) for s, e in rows]
-    assert got == naive_segments(list(ts))
+    from video_stream_processing_spark.operators.segments import close_segments
+
+    got, buf = [], None
+    for batch in batches:
+        ts = np.asarray(sorted(batch), dtype=np.int64)
+        closed, new_buf = close_segments(ts, buf, DUR)
+        for lo, hi, cnt, mn, mx in closed:
+            # positions and count agree with the carried buffer's size
+            carried = buf[1] if lo < 0 else 0
+            assert cnt == carried + hi - max(lo, 0) + 1
+            got.append((mn, mx, cnt))
+        if new_buf is not None and new_buf[1] <= len(ts):  # opened in this batch
+            assert new_buf[0] == ts[len(ts) - new_buf[1]]
+        buf = new_buf
+    assert (got, buf) == stream_buffer_model(batches)
 
 
 @settings(max_examples=300, deadline=None)

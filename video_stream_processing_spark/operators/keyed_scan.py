@@ -11,17 +11,22 @@ task. The scalable shape for per-key sequential recurrences is:
 ``mapInPandas``/``mapInArrow`` stream each partition's rows IN ORDER as a
 sequence of bounded Arrow batches
 (spark.sql.execution.arrow.maxRecordsPerBatch, default 10k rows), so the
-scan carries O(keys-in-flight) state — a dict entry per key, never a
-key's whole history. Keys are contiguous after the sort, so state can be
-dropped as soon as the key changes.
+scan carries one (key, state) pair across chunks, never a key's whole
+history. Keys are contiguous after the sort, so the state resets as soon
+as the key changes.
 
-This module hosts the one shared shuffle + sort (``keyed_sorted``); the
-recurrence bodies live with their operators (keyframe gate, exact
-segments, scene gate), and each picks its own Python boundary.
+This module hosts the one shared shuffle + sort (``keyed_sorted``) and
+the run splitter (``key_runs``). The recurrence bodies are per-key
+kernels that the streaming state functions (streaming/stateful.py) call
+too: ``keyframe.keep_keyframes`` / ``signal_scene_changes``,
+``scene.similarity_scene_changes`` and ``segments.close_segments``.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import numpy as np
 from pyspark.sql import DataFrame
 
 
@@ -59,3 +64,13 @@ def keyed_sorted(
     return frames.repartition(_scan_partitions(frames), key_col).sortWithinPartitions(
         key_col, *order_cols
     )
+
+
+def key_runs(keys) -> Iterator[tuple]:
+    """Yield ``(key, lo, hi)`` for each contiguous run ``keys[lo:hi]`` of
+    one key, in order — one chunk of a ``keyed_sorted`` scan."""
+    keys = np.asarray(keys, dtype=object)
+    bounds = [0, *(np.flatnonzero(keys[1:] != keys[:-1]) + 1).tolist(), len(keys)]
+    for lo, hi in zip(bounds, bounds[1:]):
+        if hi > lo:
+            yield keys[lo], lo, hi

@@ -21,6 +21,9 @@ Two implementations:
   faster than ``mapInArrow`` for this 3-column recurrence (SCALE.md); the
   streaming form lives in streaming/stateful.py. Kept separate because
   the sequential recurrence cannot be expressed with window functions.
+
+The exact rule's kernels, ``signal_scene_changes`` and ``keep_keyframes``,
+are shared by the batch scans and streaming/stateful.py's state functions.
 """
 
 from __future__ import annotations
@@ -55,11 +58,40 @@ def keyframe_gate(
     return frames.withColumn("__keep", keep).where(F.col("__keep")).drop("__keep")
 
 
+def keep_keyframes(
+    ts_ms: list, scene_changes: list, last_kept_ms: int | None, min_interval_ms: int
+) -> tuple[list, int | None]:
+    """KeyFrameExtractor.isKeyFrame's keep rule (:53-82) over one key's
+    rows in time order: keep the key's first frame, a frame
+    ``min_interval_ms`` past the last KEPT one, or a scene change.
+    ``last_kept_ms`` advances only on a keep (:57-61)."""
+    flags = []
+    for t, change in zip(ts_ms, scene_changes):
+        keep = bool(last_kept_ms is None or t - last_kept_ms >= min_interval_ms or change)
+        if keep:
+            last_kept_ms = t
+        flags.append(keep)
+    return flags, last_kept_ms
+
+
+def signal_scene_changes(
+    signals: list, prev_signal: float | None, threshold: float
+) -> tuple[list, float | None]:
+    """Scene rule on a signal column: a change iff a previous frame exists
+    and ``|signal - previous| > threshold``. The previous signal advances
+    on EVERY row (:81), so the flags need no keep decisions."""
+    changes = []
+    for s in signals:
+        changes.append(prev_signal is not None and abs(s - prev_signal) > threshold)
+        prev_signal = s
+    return changes, prev_signal
+
+
 def keyframe_gate_stateful(
     frames: DataFrame,
     key_col: str = "stream_id",
     ts_col: str = "ts",
-    signal_col: str | None = None,
+    signal_col: str = "scene_signal",
     min_interval_ms: int = 5000,
     scene_threshold: float = 0.3,
 ) -> DataFrame:
@@ -68,44 +100,29 @@ def keyframe_gate_stateful(
     emission). Sequential per key => bounded-memory keyed scan
     (operators/keyed_scan.py): one hash shuffle + external sort, then the
     recurrence streams over Arrow chunks carrying (last_kept_ms,
-    prev_signal) per key — a hot key's history never materializes in one
-    pandas frame (the 100 TB-safe form; the streaming twin in
-    streaming/stateful.py holds the same O(1) state per key)."""
-    import pandas as pd
-
-    from video_stream_processing_spark.operators.keyed_scan import keyed_sorted
-
-    sig = signal_col
+    prev_signal) for the current key — a hot key's history never
+    materializes in one pandas frame (the 100 TB-safe form; the streaming
+    twin in streaming/stateful.py holds the same O(1) state per key and
+    calls the same kernels)."""
+    from video_stream_processing_spark.operators.keyed_scan import key_runs, keyed_sorted
 
     def gate_scan(chunks):
-        state: dict = {}  # key -> [last_kept_ms, prev_sig]; keys are contiguous
-        current_key = None
+        key, last_kept_ms, prev_sig = None, None, None  # keys are contiguous
         for pdf in chunks:
             if len(pdf) == 0:
                 continue
-            keys = pdf[key_col].tolist()
-            ts_ms_arr = (pdf[ts_col].astype("int64") // 1_000_000).tolist()
-            sigs = pdf[sig].tolist() if sig else [None] * len(pdf)
+            ts_ms = (pdf[ts_col].astype("int64") // 1_000_000).tolist()
+            sigs = pdf[signal_col].tolist()
             keep_mask = []
-            for k, ts_ms, s in zip(keys, ts_ms_arr, sigs):
-                if k != current_key:
-                    state.pop(current_key, None)  # sorted input: old key is done
-                    current_key = k
-                last_kept_ms, prev_sig = state.get(k, (None, None))
-                keep = False
-                if last_kept_ms is None or ts_ms - last_kept_ms >= min_interval_ms:
-                    keep = True
-                elif (
-                    sig is not None
-                    and prev_sig is not None
-                    and abs(s - prev_sig) > scene_threshold
-                ):
-                    keep = True
-                if keep:
-                    last_kept_ms = ts_ms
-                state[k] = (last_kept_ms, s)
-                keep_mask.append(keep)
-            out = pdf[pd.Series(keep_mask, index=pdf.index)]
+            for k, lo, hi in key_runs(pdf[key_col].to_numpy()):
+                if k != key:  # sorted input: the old key is done
+                    key, last_kept_ms, prev_sig = k, None, None
+                changes, prev_sig = signal_scene_changes(sigs[lo:hi], prev_sig, scene_threshold)
+                flags, last_kept_ms = keep_keyframes(
+                    ts_ms[lo:hi], changes, last_kept_ms, min_interval_ms
+                )
+                keep_mask += flags
+            out = pdf[keep_mask]
             if len(out):
                 yield out
 

@@ -15,11 +15,13 @@ gate (streaming/stateful.py keyframes_from_bytes_stream):
 - ``_arrow_byte_histograms``: raw byte histograms of a whole Arrow
   binary column in one bincount;
 - ``_decoded_luminance_histogram``: luminance histogram of one decoded
-  image (entropy-coded wire formats such as JPEG);
-- ``_np_hist_correlation``: HISTCMP_CORREL of two histograms.
+  image (entropy-coded wire formats such as JPEG); ``_payload_histograms``
+  picks one of the two per ``histogram`` mode;
+- ``_np_hist_correlation``: HISTCMP_CORREL of two histograms;
+- ``similarity_scene_changes``: the scene rule over one key's rows.
 
-The batch gate ``keyframe_gate_from_bytes`` runs the recurrence on
-last-kept-time inside one bounded keyed scan (operators/keyed_scan.py).
+The batch gate ``keyframe_gate_from_bytes`` runs it and keyframe.py's
+``keep_keyframes`` inside one bounded keyed scan (operators/keyed_scan.py).
 
 Semantics pinned to KeyFrameExtractor.isKeyFrame (:53-82):
 - interval rule first: ts - last_kept >= min_interval keeps and resets;
@@ -102,6 +104,14 @@ def _decoded_luminance_histogram(b) -> np.ndarray | None:
     return np.bincount(lum.ravel(), minlength=N_BINS) / float(lum.size)
 
 
+def _payload_histograms(col, histogram: str) -> list:
+    """Arrow binary column -> per-row histograms in ``histogram`` mode
+    ('bytes' or 'decoded'); None marks a decode failure."""
+    if histogram == "decoded":
+        return [_decoded_luminance_histogram(p) for p in col.to_pylist()]
+    return _arrow_byte_histograms(col)
+
+
 def _np_hist_correlation(a: np.ndarray, b: np.ndarray) -> float:
     """OpenCV HISTCMP_CORREL:
     sum((a-ma)(b-mb)) / sqrt(sum((a-ma)^2) * sum((b-mb)^2)); zero
@@ -117,6 +127,29 @@ def _np_hist_correlation(a: np.ndarray, b: np.ndarray) -> float:
     if den > 0:
         return float((da * db).sum() / den)
     return 1.0 if np.array_equal(a, b) else 0.0
+
+
+def similarity_scene_changes(
+    hists: list, prev_hist: np.ndarray | None, has_prev: bool, threshold: float
+) -> tuple[list, list, np.ndarray | None, bool]:
+    """Scene rule on histograms over one key's rows in time order
+    (KeyFrameExtractor.java:53-82): the similarity to the previous frame
+    is None without one, 1.0 when either histogram is None, else
+    HISTCMP_CORREL; a change iff it is below ``1 - threshold``. The
+    previous histogram advances on EVERY row."""
+    cut = 1.0 - threshold
+    sims, changes = [], []
+    for h in hists:
+        if not has_prev:
+            sim = None
+        elif h is None or prev_hist is None:
+            sim = 1.0  # decode failure: assume similar (:94,107)
+        else:
+            sim = _np_hist_correlation(h, prev_hist)
+        sims.append(sim)
+        changes.append(sim is not None and sim < cut)
+        prev_hist, has_prev = h, True
+    return sims, changes, prev_hist, has_prev
 
 
 def keyframe_gate_from_bytes(
@@ -137,7 +170,7 @@ def keyframe_gate_from_bytes(
     VideoStreamProcessingJob.java:151), one external sort, one
     mapInArrow. The histogram is per-row, so it computes after the
     sort, and the previous-frame histogram rides in the scan's
-    O(keys-in-flight) state instead of a window lag. The payload column
+    current-key state instead of a window lag. The payload column
     never appears in the OUTPUT schema (dropped inside the scan), so
     binary leaves the plan at the Python boundary. The scan reads and
     emits ``pyarrow.RecordBatch`` directly, which measured 1.14x faster
@@ -156,56 +189,36 @@ def keyframe_gate_from_bytes(
 
     from pyspark.sql.types import StructType
 
-    from video_stream_processing_spark.operators.keyed_scan import keyed_sorted
+    from video_stream_processing_spark.operators.keyed_scan import key_runs, keyed_sorted
+    from video_stream_processing_spark.operators.keyframe import keep_keyframes
 
-    cut = 1.0 - scene_threshold
-    decoded = histogram == "decoded"
     out_schema = StructType([f for f in frames.schema.fields if f.name != payload_col])
 
     def fused_scan(batches):
-        # key -> (prev_hist | None, last_kept_ms); keys are contiguous
-        # after the sort, so state drops as soon as the key changes.
-        state: dict = {}
-        current_key = None
+        # the current key's state; keys are contiguous after the sort,
+        # so it resets as soon as the key changes
+        key, prev_h, has_prev, last_kept_ms = None, None, False, None
         for b in batches:
             if b.num_rows == 0:
                 continue
             cols = {name: i for i, name in enumerate(b.schema.names)}
-            keys = b.column(cols[key_col]).to_pylist()
             # Arrow timestamps are int64 microseconds under the hood; a
             # zero-copy cast + vectorized divide beats per-row datetime math
-            ts_ms_arr = (
+            ts_ms = (
                 b.column(cols[ts_col]).cast(pa.int64()).to_numpy() // 1000
             ).tolist()
-            payloads = b.column(cols[payload_col])
-            if decoded:
-                hists = [_decoded_luminance_histogram(p) for p in payloads.to_pylist()]
-            else:
-                hists = _arrow_byte_histograms(payloads)
+            hists = _payload_histograms(b.column(cols[payload_col]), histogram)
             keep_mask = []
-            for k, ts_ms, h in zip(keys, ts_ms_arr, hists):
-                if k != current_key:
-                    state.pop(current_key, None)
-                    current_key = k
-                st = state.get(k)
-                if st is None:
-                    prev_h, last_kept_ms, has_prev = None, None, False
-                else:
-                    prev_h, last_kept_ms = st
-                    has_prev = True
-                if not has_prev:
-                    sim = None
-                elif h is None or prev_h is None:
-                    sim = 1.0  # decode failure: assume similar (:94,107)
-                else:
-                    sim = _np_hist_correlation(h, prev_h)
-                keep = False
-                if last_kept_ms is None or ts_ms - last_kept_ms >= min_interval_ms:
-                    keep = True
-                elif sim is not None and sim < cut:
-                    keep = True
-                state[k] = (h, ts_ms if keep else last_kept_ms)
-                keep_mask.append(keep)
+            for k, lo, hi in key_runs(b.column(cols[key_col]).to_pylist()):
+                if k != key:  # sorted input: the old key is done
+                    key, prev_h, has_prev, last_kept_ms = k, None, False, None
+                _, changes, prev_h, has_prev = similarity_scene_changes(
+                    hists[lo:hi], prev_h, has_prev, scene_threshold
+                )
+                flags, last_kept_ms = keep_keyframes(
+                    ts_ms[lo:hi], changes, last_kept_ms, min_interval_ms
+                )
+                keep_mask += flags
             out = b.select([n for n in b.schema.names if n != payload_col]).filter(
                 pa.array(keep_mask, type=pa.bool_())
             )

@@ -9,15 +9,16 @@ Two semantics (SURVEY.md §2.6(c)):
   windows via ``F.window``; a pure groupBy aggregation with map-side
   partial aggregation, oracle-checkable. This is the declared-query form
   and the scalable default (no per-key sequential state).
-- ``segment_windows_exact`` (operators/segments_exact.py semantics inside
-  streaming/stateful.py for the stream case): first-arrival-aligned and
-  trigger-inclusive like the reference — window start = first buffered
-  frame's ts; a frame arriving >= duration after the start CLOSES the
-  window and is included in it. Sequential per key => applyInPandas.
+- ``segment_windows_exact``: first-arrival-aligned and trigger-inclusive
+  like the reference — window start = first buffered frame's ts; a frame
+  arriving >= duration after the start CLOSES the window and is included
+  in it. Sequential per key => a bounded keyed scan (mapInPandas) whose
+  close rule, ``close_segments``, the stream state function calls too.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -55,6 +56,40 @@ def segment_windows_aligned(
     )
 
 
+def close_segments(
+    ts_ms: np.ndarray, open_buf: tuple | None, duration_ms: int
+) -> tuple[list, tuple | None]:
+    """The reference's buffer close (add-then-check, trigger-inclusive,
+    VideoProcessFunction.java:87-100) over one key's run of sorted epoch-ms
+    ``ts_ms``, carrying the open buffer ``(start_ms, count, min_ms,
+    max_ms)`` or None. The first row with ``ts - start_ms >= duration_ms``
+    closes the buffer and is counted in it; the next row opens a new one.
+    Rows earlier than a carried start (late stream rows) join the buffer.
+
+    Returns ``(closed, open_buf)``; ``closed`` holds ``(lo, hi, count,
+    min_ms, max_ms)`` per segment: rows ``lo..hi`` of the run, ``lo = -1``
+    when the carried buffer closed. A returned buffer with ``count <= n``
+    opened in this run at row ``n - count``."""
+    n = len(ts_ms)
+    closed = []
+    i = 0
+    if open_buf is not None:
+        start_ms, cnt, mn, mx = open_buf
+        mn = min(mn, int(ts_ms[0]))
+        j = int(np.searchsorted(ts_ms, start_ms + duration_ms, side="left"))
+        if j == n:  # still open: absorb the whole run
+            return closed, (start_ms, cnt + n, mn, max(mx, int(ts_ms[-1])))
+        closed.append((-1, j, cnt + j + 1, mn, max(mx, int(ts_ms[j]))))
+        i = j + 1
+    while i < n:
+        j = int(np.searchsorted(ts_ms, ts_ms[i] + duration_ms, side="left"))
+        if j == n:
+            return closed, (int(ts_ms[i]), n - i, int(ts_ms[i]), int(ts_ms[-1]))
+        closed.append((i, j, j - i + 1, int(ts_ms[i]), int(ts_ms[j])))
+        i = j + 1
+    return closed, None
+
+
 def segment_windows_exact(
     frames: DataFrame,
     key_col: str = "stream_id",
@@ -71,15 +106,15 @@ def segment_windows_exact(
     SURVEY.md §2.6(g), documented deviation).
 
     Sequential recurrence per key => bounded-memory keyed scan
-    (operators/keyed_scan.py): hash shuffle + external sort, then a
-    searchsorted skip-scan per Arrow chunk carrying O(1) state
-    (start, count, last-seen) per open buffer — a hot key's history never
-    materializes in one pandas frame. O(n_segments log chunk) per chunk.
+    (operators/keyed_scan.py): hash shuffle + external sort, then
+    ``close_segments`` per key run of each Arrow chunk, carrying the
+    current key's open buffer plus its first and last timestamps — a hot
+    key's history never materializes in one pandas frame.
+    O(n_segments log chunk) per chunk.
     """
-    import numpy as np
     import pandas as pd
 
-    from video_stream_processing_spark.operators.keyed_scan import keyed_sorted
+    from video_stream_processing_spark.operators.keyed_scan import key_runs, keyed_sorted
 
     out_schema = (
         f"{key_col} string, start_time timestamp, end_time timestamp, "
@@ -93,68 +128,30 @@ def segment_windows_exact(
         )
 
     def segment_scan(chunks):
-        # key -> [start_ms, start_ts, cnt, last_ms, last_ts] for the open
-        # tail buffer; keys are contiguous after the sort, so at most one
-        # open buffer outlives each chunk boundary per task.
-        state: dict = {}
-        current_key = None
-
-        def flush(k) -> tuple | None:
-            st = state.pop(k, None)
-            if st is None:
-                return None
-            start_ms, start_ts, cnt, last_ms, last_ts = st
-            return (k, start_ts, last_ts, cnt, last_ms - start_ms)
-
+        # the current key's open buffer (close_segments' state) plus the
+        # full-precision ts of its first and last rows; keys are
+        # contiguous after the sort, so one buffer outlives each chunk
+        key, buf, first_ts, last_ts = None, None, None, None
         for pdf in chunks:
-            if len(pdf) == 0:
-                continue
             rows: list[tuple] = []
-            for k, grp in pdf.groupby(key_col, sort=False):
-                if k != current_key:
-                    if current_key is not None:
-                        tail = flush(current_key)
-                        if tail is not None:
-                            rows.append(tail)
-                    current_key = k
-                ts_vals = grp[ts_col].to_numpy()
-                ts_ms = (grp[ts_col].astype("int64") // 1_000_000).to_numpy()
-                n = len(ts_ms)
-                i = 0
-                if k in state:
-                    start_ms, start_ts, cnt, _, _ = state[k]
-                    j = int(np.searchsorted(ts_ms, start_ms + duration_ms, side="left"))
-                    if j < n:  # carried buffer closes inside this chunk
-                        rows.append(
-                            (k, start_ts, ts_vals[j], cnt + j + 1, int(ts_ms[j]) - start_ms)
-                        )
-                        del state[k]
-                        i = j + 1
-                    else:  # still open: absorb the whole chunk
-                        state[k] = (start_ms, start_ts, cnt + n, int(ts_ms[-1]), ts_vals[-1])
-                        continue
-                while i < n:
-                    j = int(np.searchsorted(ts_ms, ts_ms[i] + duration_ms, side="left"))
-                    if j < n:
-                        rows.append(
-                            (k, ts_vals[i], ts_vals[j], j - i + 1, int(ts_ms[j] - ts_ms[i]))
-                        )
-                        i = j + 1
-                    else:
-                        state[k] = (
-                            int(ts_ms[i]),
-                            ts_vals[i],
-                            n - i,
-                            int(ts_ms[-1]),
-                            ts_vals[-1],
-                        )
-                        break
+            ts_all = pdf[ts_col].to_numpy()
+            ms_all = (pdf[ts_col].astype("int64") // 1_000_000).to_numpy()
+            for k, lo, hi in key_runs(pdf[key_col].to_numpy()):
+                if k != key:  # sorted input: flush the old key's tail
+                    if buf is not None:
+                        rows.append((key, first_ts, last_ts, buf[1], buf[3] - buf[2]))
+                    key, buf = k, None
+                ts_vals, ts_ms = ts_all[lo:hi], ms_all[lo:hi]
+                closed, new_buf = close_segments(ts_ms, buf, duration_ms)
+                for a, b, cnt, mn, mx in closed:
+                    rows.append((k, ts_vals[a] if a >= 0 else first_ts, ts_vals[b], cnt, mx - mn))
+                if new_buf is not None and new_buf[1] <= len(ts_ms):  # opened here
+                    first_ts = ts_vals[len(ts_ms) - new_buf[1]]
+                buf, last_ts = new_buf, ts_vals[-1]
             if rows:
                 yield _frame(rows)
-        tails = [flush(k) for k in list(state)]
-        tails = [t for t in tails if t is not None]
-        if tails:
-            yield _frame(tails)
+        if buf is not None:
+            yield _frame([(key, first_ts, last_ts, buf[1], buf[3] - buf[2])])
 
     return keyed_sorted(frames, key_col, (ts_col,)).mapInPandas(
         segment_scan, schema=out_schema

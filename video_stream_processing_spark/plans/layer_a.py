@@ -464,9 +464,10 @@ WHERE rr = 1 AND open
 def a08_segment_windows_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact reference buffering semantics (SURVEY.md §2.6(c)):
     first-arrival-aligned windows, trigger frame included, tail flushed.
-    Sequential per-key recurrence -> applyInPandas; verified by
-    tests/test_segments_exact.py hand-computed traces. Oracle: DuckDB
-    linear RECURSIVE CTE (round-4 upgrade from rows-only)."""
+    Sequential per-key recurrence -> keyed_sorted(...).mapInPandas over
+    segments.close_segments; verified by tests/test_segments_property.py
+    (model traces) and tests/test_keyed_scan.py (chunk carry). Oracle:
+    DuckDB linear RECURSIVE CTE (round-4 upgrade from rows-only)."""
     from video_stream_processing_spark.operators.segments import segment_windows_exact
 
     events = load_table(spark, sf_dir, "events")
@@ -515,8 +516,9 @@ def a09_keyframe_gate_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact reference keyframe semantics: the interval rule measures
     from the last KEPT frame (KeyFrameExtractor.java:57-61 updates
     lastKeyFrameTime only on emission) — a sequential recurrence the
-    lag-based a02 can't express. applyInPandas per key; the streaming
-    twin (streaming/stateful.py:keyframes_stream) is proven equivalent
+    lag-based a02 can't express. keyed_sorted(...).mapInPandas over the
+    keyframe.py kernels the streaming twin
+    (streaming/stateful.py:keyframes_stream) calls too, proven equivalent
     in tests/test_streaming.py. Oracle: DuckDB linear RECURSIVE CTE
     (round-4 upgrade from rows-only)."""
     from video_stream_processing_spark.operators.keyframe import keyframe_gate_stateful
@@ -531,7 +533,6 @@ def a09_keyframe_gate_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         frames,
         key_col="stream_id",
         ts_col="ts",
-        signal_col="scene_signal",
         min_interval_ms=KEYFRAME_INTERVAL_MS,
         scene_threshold=SCENE_THRESHOLD,
     )

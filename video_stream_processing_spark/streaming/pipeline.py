@@ -855,7 +855,6 @@ def flagship_job_stream(
     Returns (fact_query, segments_query), both started."""
     from video_stream_processing_spark.streaming.sinks import (
         write_detections_fact_idempotent,
-        write_segments_idempotent,
     )
     from video_stream_processing_spark.streaming.stateful import (
         keyframes_from_bytes_stream,
@@ -923,7 +922,7 @@ def flagship_job_stream(
         watermark=None,
     )
     seg_query = (
-        segs.writeStream.foreachBatch(write_segments_idempotent(segments_dir, encoder))
+        segs.writeStream.foreachBatch(write_segments(segments_dir, encoder, idempotent=True))
         .option("checkpointLocation", f"{checkpoint_root}/segments")
         .outputMode("append")
         .start()

@@ -322,8 +322,3 @@ def write_segments(out_dir: str, encoder: SegmentEncoder | None = None, idempote
             with_key.write.mode("append").parquet(out_dir)
 
     return sink
-
-
-def write_segments_idempotent(out_dir: str, encoder: SegmentEncoder | None = None):
-    """Exactly-once segments sink (batch-id dynamic-overwrite partitions)."""
-    return write_segments(out_dir, encoder, idempotent=True)

@@ -17,6 +17,9 @@ State is (start_ms, count, min_ts, max_ts [, last_kf_ms, prev_signal])
 tuples — O(1) per key, NOT the buffered frame list the reference
 snapshots; Structured Streaming's state store checkpoints it correctly
 by construction (the reference's restore path is dead code, §2.6(d)).
+
+The state functions only unpack state, call the rule kernels the batch
+keyed scans call too (segments.py, keyframe.py, scene.py) and store it.
 """
 
 from __future__ import annotations
@@ -37,14 +40,39 @@ KEYFRAME_STATE_SCHEMA = "last_kf_ms long, prev_signal double"
 KEYFRAME_OUT_SCHEMA = "stream_id string, ts timestamp, scene_signal double, is_keyframe boolean"
 
 
-def segment_stateful_fn(duration_ms: int = 180_000, watermark_close: bool = True):
+def _with_state(
+    frames: DataFrame,
+    key_col: str,
+    watermark: str | None,
+    fn,
+    out_schema: str,
+    state_schema: str,
+    timeout: str = GroupStateTimeout.NoTimeout,
+) -> DataFrame:
+    """``groupBy(key_col).applyInPandasWithState(fn)`` in append mode, the
+    shape every state function here runs in. ``watermark=None`` inherits
+    the upstream watermark."""
+    if watermark is not None:
+        frames = frames.withWatermark("ts", watermark)
+    return frames.groupBy(key_col).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=timeout,
+    )
+
+
+def segment_stateful_fn(duration_ms: int = 180_000):
     """Returns the applyInPandasWithState function for exact segments.
 
     Trigger-inclusive close: the frame that is >= duration past the
     buffer start CLOSES the segment and is counted inside it; the next
     segment starts at the NEXT frame (VideoProcessFunction.java:87-100).
-    Event-time timeout emits the tail segment when the watermark passes.
-    """
+    The state is the open buffer of ``close_segments``, the batch scan's
+    rule too. Event-time timeout emits the tail segment when the
+    watermark passes."""
+    from video_stream_processing_spark.operators.segments import close_segments
 
     def fn(
         key: tuple,
@@ -54,57 +82,30 @@ def segment_stateful_fn(duration_ms: int = 180_000, watermark_close: bool = True
         (stream_id,) = key
         if state.hasTimedOut:
             if state.exists:
-                start_ms, cnt, mn, mx = state.get
+                _, cnt, mn, mx = state.get
                 state.remove()
-                yield _segment_row(stream_id, mn, mx, cnt, "timeout")
+                yield _segment_rows(stream_id, [(mn, mx, cnt, "timeout")])
             return
 
-        if state.exists:
-            start_ms, cnt, mn, mx = state.get
-        else:
-            start_ms, cnt, mn, mx = None, 0, None, None
+        rows = pd.concat(list(pdfs), ignore_index=True).sort_values("ts", kind="mergesort")
+        ts_ms = (rows["ts"].astype("int64") // 1_000_000).to_numpy()
+        closed, new_buf = close_segments(ts_ms, state.get if state.exists else None, duration_ms)
 
-        out = []
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values("ts", kind="mergesort")
-        ts_ms = (rows["ts"].astype("int64") // 1_000_000).tolist()
-        for t in ts_ms:
-            if start_ms is None:
-                start_ms, cnt, mn, mx = t, 1, t, t
-                continue
-            cnt += 1
-            mn, mx = min(mn, t), max(mx, t)
-            if t - start_ms >= duration_ms:  # add-then-check, inclusive
-                out.append((stream_id, mn, mx, cnt, "size"))
-                start_ms, cnt, mn, mx = None, 0, None, None
-
-        if start_ms is not None:
-            state.update((start_ms, cnt, mn, mx))
-            if watermark_close:
-                # flush the tail once the watermark passes start+duration
-                state.setTimeoutTimestamp(start_ms + duration_ms)
+        if new_buf is not None:
+            state.update(new_buf)
+            # flush the tail once the watermark passes start+duration
+            state.setTimeoutTimestamp(new_buf[0] + duration_ms)
         elif state.exists:
             state.remove()
 
-        if out:
-            yield pd.DataFrame(
-                [
-                    {
-                        "stream_id": s,
-                        "start_time": pd.Timestamp(mn_, unit="ms"),
-                        "end_time": pd.Timestamp(mx_, unit="ms"),
-                        "frame_count": int(c),
-                        "duration_ms": int(mx_ - mn_),
-                        "closed_by": why,
-                    }
-                    for (s, mn_, mx_, c, why) in out
-                ]
-            )
+        if closed:
+            yield _segment_rows(stream_id, [(mn, mx, c, "size") for _, _, c, mn, mx in closed])
 
     return fn
 
 
-def _segment_row(stream_id, mn, mx, cnt, why) -> pd.DataFrame:
+def _segment_rows(stream_id, segs) -> pd.DataFrame:
+    """(min_ms, max_ms, count, closed_by) tuples -> SEGMENT_OUT_SCHEMA rows."""
     return pd.DataFrame(
         [
             {
@@ -115,6 +116,7 @@ def _segment_row(stream_id, mn, mx, cnt, why) -> pd.DataFrame:
                 "duration_ms": int(mx - mn),
                 "closed_by": why,
             }
+            for (mn, mx, cnt, why) in segs
         ]
     )
 
@@ -126,29 +128,26 @@ def keyframe_stateful_fn(min_interval_ms: int = 5_000, scene_threshold: float = 
 
     Keep a frame iff (a) >= min_interval since last keyframe, or (b)
     |signal - prev_signal| > threshold (scene change). First frame of a
-    key is always a keyframe (no previous state)."""
+    key is always a keyframe (no previous state). The rules are
+    keyframe.py's kernels, shared with the batch gate."""
+    from video_stream_processing_spark.operators.keyframe import (
+        keep_keyframes,
+        signal_scene_changes,
+    )
 
     def fn(
         key: tuple,
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        (stream_id,) = key
-        if state.hasTimedOut:  # pragma: no cover - no timeout registered
-            return
+        (stream_id,) = key  # NoTimeout: never called timed out
         last_kf_ms, prev_signal = state.get if state.exists else (None, None)
         rows = pd.concat(list(pdfs), ignore_index=True).sort_values("ts", kind="mergesort")
         ts_ms = (rows["ts"].astype("int64") // 1_000_000).tolist()
-        signals = rows["scene_signal"].tolist()
-        flags = []
-        for t, sig in zip(ts_ms, signals):
-            interval_ok = last_kf_ms is None or (t - last_kf_ms) >= min_interval_ms
-            scene_change = prev_signal is not None and abs(sig - prev_signal) > scene_threshold
-            is_kf = bool(interval_ok or scene_change)
-            if is_kf:
-                last_kf_ms = t
-            prev_signal = sig
-            flags.append(is_kf)
+        changes, prev_signal = signal_scene_changes(
+            rows["scene_signal"].tolist(), prev_signal, scene_threshold
+        )
+        flags, last_kf_ms = keep_keyframes(ts_ms, changes, last_kf_ms, min_interval_ms)
         state.update((last_kf_ms, float(prev_signal) if prev_signal is not None else None))
         out = rows[["ts", "scene_signal"]].copy()
         out.insert(0, "stream_id", stream_id)
@@ -177,60 +176,35 @@ def keyframe_bytes_stateful_fn(
     ``histogram`` mirrors operators/scene.py keyframe_gate_from_bytes:
     'bytes' (raw payload) or 'decoded' (luminance of the decoded image —
     required for entropy-coded wire formats like the reference's JPEG).
-    The histogram and correlation kernels are scene.py's, so batch and
-    stream compute bit-identical similarities."""
+    The histogram, scene-rule and keep kernels are scene.py's and
+    keyframe.py's, so batch and stream compute bit-identical similarities
+    and keeps."""
     import numpy as np
     import pyarrow as pa
 
+    from video_stream_processing_spark.operators.keyframe import keep_keyframes
     from video_stream_processing_spark.operators.scene import (
-        _arrow_byte_histograms,
-        _decoded_luminance_histogram,
-        _np_hist_correlation,
+        _payload_histograms,
+        similarity_scene_changes,
     )
-
-    cut = 1.0 - scene_threshold
 
     def fn(
         key: tuple,
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        (stream_id,) = key
-        if state.hasTimedOut:  # pragma: no cover - no timeout registered
-            return
-        if state.exists:
-            last_kf_ms, prev_hist_list = state.get
-            prev_hist = None if prev_hist_list is None else np.asarray(prev_hist_list)
-            has_prev = True
-        else:
-            last_kf_ms, prev_hist, has_prev = None, None, False
+        (stream_id,) = key  # NoTimeout: never called timed out
+        last_kf_ms, prev_hist = state.get if state.exists else (None, None)
+        if prev_hist is not None:
+            prev_hist = np.asarray(prev_hist)
         rows = pd.concat(list(pdfs), ignore_index=True).sort_values("ts", kind="mergesort")
         ts_ms = (rows["ts"].astype("int64") // 1_000_000).tolist()
-        if histogram == "bytes":
-            hists = _arrow_byte_histograms(pa.array(rows["frame_data"], pa.binary()))
-        else:
-            hists = [_decoded_luminance_histogram(b) for b in rows["frame_data"]]
-        sims, flags = [], []
-        for t, h in zip(ts_ms, hists):
-            if not has_prev:
-                sim = None
-            elif h is None or prev_hist is None:
-                sim = 1.0  # decode failure -> assume similar (:94,107)
-            else:
-                sim = _np_hist_correlation(h, prev_hist)
-            keep = False
-            if last_kf_ms is None or t - last_kf_ms >= min_interval_ms:
-                keep = True
-            elif sim is not None and sim < cut:
-                keep = True
-            if keep:
-                last_kf_ms = t
-            prev_hist, has_prev = h, True
-            sims.append(sim)
-            flags.append(keep)
-        state.update(
-            (last_kf_ms, None if prev_hist is None else [float(x) for x in prev_hist])
+        hists = _payload_histograms(pa.array(rows["frame_data"], pa.binary()), histogram)
+        sims, changes, prev_hist, _ = similarity_scene_changes(
+            hists, prev_hist, state.exists, scene_threshold
         )
+        flags, last_kf_ms = keep_keyframes(ts_ms, changes, last_kf_ms, min_interval_ms)
+        state.update((last_kf_ms, None if prev_hist is None else prev_hist.tolist()))
         out = rows[["ts"]].copy()
         out.insert(0, "stream_id", stream_id)
         out["scene_sim"] = pd.Series(sims, index=out.index, dtype="float64")
@@ -253,18 +227,10 @@ def keyframes_from_bytes_stream(
     this gate is chained AFTER another stateful operator (redefining a
     watermark downstream is disallowed in Spark's multi-stateful
     model; the flagship graph chains it after the near-dup gate)."""
-    if watermark is not None:
-        frames = frames.withWatermark("ts", watermark)
-    return (
-        frames
-        .groupBy("stream_id")
-        .applyInPandasWithState(
-            keyframe_bytes_stateful_fn(min_interval_ms, scene_threshold, histogram),
-            outputStructType=KEYFRAME_BYTES_OUT_SCHEMA,
-            stateStructType=KEYFRAME_BYTES_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _with_state(
+        frames, "stream_id", watermark,
+        keyframe_bytes_stateful_fn(min_interval_ms, scene_threshold, histogram),
+        KEYFRAME_BYTES_OUT_SCHEMA, KEYFRAME_BYTES_STATE_SCHEMA,
     )
 
 
@@ -276,18 +242,9 @@ def exact_segments_stream(
     """Streaming DataFrame -> exact segments. Input needs (stream_id, ts).
     ``watermark=None`` inherits the upstream watermark (see
     keyframes_from_bytes_stream)."""
-    if watermark is not None:
-        frames = frames.withWatermark("ts", watermark)
-    return (
-        frames
-        .groupBy("stream_id")
-        .applyInPandasWithState(
-            segment_stateful_fn(duration_ms),
-            outputStructType=SEGMENT_OUT_SCHEMA,
-            stateStructType=SEGMENT_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _with_state(
+        frames, "stream_id", watermark, segment_stateful_fn(duration_ms),
+        SEGMENT_OUT_SCHEMA, SEGMENT_STATE_SCHEMA, GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -298,16 +255,9 @@ def keyframes_stream(
     watermark: str = "10 minutes",
 ) -> DataFrame:
     """Streaming DataFrame -> keyframe-flagged frames."""
-    return (
-        frames.withWatermark("ts", watermark)
-        .groupBy("stream_id")
-        .applyInPandasWithState(
-            keyframe_stateful_fn(min_interval_ms, scene_threshold),
-            outputStructType=KEYFRAME_OUT_SCHEMA,
-            stateStructType=KEYFRAME_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _with_state(
+        frames, "stream_id", watermark, keyframe_stateful_fn(min_interval_ms, scene_threshold),
+        KEYFRAME_OUT_SCHEMA, KEYFRAME_STATE_SCHEMA,
     )
 
 
@@ -395,16 +345,9 @@ def funnel_stream(
     events: DataFrame, within_ms: int = 172_800_000, watermark: str = "30 minutes"
 ) -> DataFrame:
     """view -> click -> purchase conversions over a user event stream."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            funnel_stateful_fn(within_ms=within_ms),
-            outputStructType=FUNNEL_OUT_SCHEMA,
-            stateStructType=FUNNEL_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _with_state(
+        events, "user_id", watermark, funnel_stateful_fn(within_ms=within_ms),
+        FUNNEL_OUT_SCHEMA, FUNNEL_STATE_SCHEMA, GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -472,16 +415,10 @@ def anomaly_stream(
 ) -> DataFrame:
     """Rolling z-score anomalies over a keyed event stream (x73's
     streaming twin)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            anomaly_stateful_fn(window=window, warmup=warmup, threshold=threshold),
-            outputStructType=ANOMALY_OUT_SCHEMA,
-            stateStructType=ANOMALY_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _with_state(
+        events, "user_id", watermark,
+        anomaly_stateful_fn(window=window, warmup=warmup, threshold=threshold),
+        ANOMALY_OUT_SCHEMA, ANOMALY_STATE_SCHEMA,
     )
 
 
@@ -545,14 +482,6 @@ def gap_stream(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
     """Per-event inter-arrival gap buckets over a keyed stream — the
     stateful input feed of x90's histogram (aggregate the output by
     (event_type, log2_bucket) downstream for the running histogram)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            gap_stateful_fn(),
-            outputStructType=GAP_OUT_SCHEMA,
-            stateStructType=GAP_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _with_state(
+        events, "user_id", watermark, gap_stateful_fn(), GAP_OUT_SCHEMA, GAP_STATE_SCHEMA
     )
