@@ -160,60 +160,6 @@ def test_incremental_hamming_shard_discipline(spark):
     assert all(30 not in pair for pair in got)
 
 
-@pytest.mark.slow
-def test_image_dedup_stream_suppresses_reencoded_copy(spark, tmp_path):
-    """Streaming exact-signature gate: a byte-identical AND a
-    losslessly re-encoded copy arriving in a LATER micro-batch are
-    suppressed (same dHash sig inside the watermark); a distinct image
-    passes; undecodable bytes are dropped."""
-    from video_stream_processing_spark.streaming.pipeline import image_dedup_stream
-
-    BASE = 1_700_000_000_000
-    img_a, img_b = _img(30), _img(31)
-    # re-encode a's decoded pixels: BMP is lossless, sig identical
-    reenc = encode_bmp(decode_bmp(encode_bmp(img_a)))
-
-    def _w(rows, mode):
-        (
-            spark.createDataFrame(rows, "doc_id long, ts_ms long, payload binary")
-            .select("doc_id", F.timestamp_millis("ts_ms").alias("ts"), "payload")
-            .coalesce(1)
-            .write.mode(mode)
-            .parquet(str(tmp_path / "frames"))
-        )
-
-    _w([(1, BASE, bytearray(encode_bmp(img_a)))], "overwrite")
-    stream = spark.readStream.schema(
-        "doc_id long, ts timestamp, payload binary"
-    ).parquet(str(tmp_path / "frames"))
-    q = (
-        image_dedup_stream(stream, watermark="10 minutes")
-        .writeStream.format("memory")
-        .queryName("img_dedup")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        _w(
-            [
-                (2, BASE + 1_000, bytearray(encode_bmp(img_a))),  # exact replay
-                (3, BASE + 2_000, bytearray(reenc)),  # re-encoded copy
-                (4, BASE + 3_000, bytearray(encode_bmp(img_b))),  # distinct
-                (5, BASE + 4_000, bytearray(b"junk")),  # undecodable
-            ],
-            "append",
-        )
-        q.processAllAvailable()
-        ids = sorted(
-            r["doc_id"] for r in spark.sql("SELECT * FROM img_dedup").collect()
-        )
-    finally:
-        q.stop()
-    assert ids == [1, 4]
-
-
 def test_video_fingerprint_planted_copy_found(spark):
     import numpy as np
 
@@ -500,240 +446,3 @@ def test_x145_grid_lands_on_blocks():
         for j in range(8)
     )
     assert dhash64(img) == expected
-
-
-@pytest.mark.slow
-def test_video_neardup_stream_suppresses_jittered_copy_vs_index(spark, tmp_path):
-    """Streaming NEAR-dup ingest gate for video, stream==batch pinned:
-    a brightness-jittered copy of an indexed clip is suppressed by the
-    stream-static band join in either micro-batch; a distinct clip
-    passes; an in-stream exact replay is suppressed; a wrong-frame-count
-    clip drops (decode-or-null)."""
-    from video_stream_processing_spark.functions.jpegcodec import encode_jpeg
-    from video_stream_processing_spark.operators.multimodal import (
-        VFP_FRAMES,
-        make_clip_sig_kernel,
-    )
-    from video_stream_processing_spark.streaming.pipeline import (
-        video_neardup_dedup_stream,
-    )
-
-    BASE = 1_700_000_000_000
-    rng = np.random.RandomState(9)
-    base_vals = [2 * int(v) for v in rng.randint(0, 127, VFP_FRAMES)]
-    other_vals = [2 * int(v) for v in rng.randint(0, 127, VFP_FRAMES)]
-    third_vals = [2 * int(v) for v in rng.randint(0, 127, VFP_FRAMES)]
-
-    def clip(vals):
-        return b"".join(encode_jpeg(np.full((8, 8, 3), v, np.uint8)) for v in vals)
-
-    def jit(vals, step):
-        return [min(v + (step if f % 13 == 0 else 0), 255) for f, v in enumerate(vals)]
-
-    kernel = make_clip_sig_kernel()
-    index_sig = spark.createDataFrame(
-        [(100, kernel(clip(base_vals)))], "doc_id long, sig string"
-    )
-    batch1 = [
-        (1, BASE, bytearray(clip(jit(base_vals, 2)))),  # near indexed -> drop
-        (2, BASE + 1_000, bytearray(clip(other_vals))),  # distinct -> keep
-    ]
-    batch2 = [
-        (3, BASE + 2_000, bytearray(clip(jit(base_vals, 4)))),  # near indexed
-        (4, BASE + 3_000, bytearray(clip(other_vals))),  # in-stream replay
-        (5, BASE + 4_000, bytearray(clip(third_vals))),  # distinct -> keep
-        (6, BASE + 5_000, bytearray(clip(base_vals[: VFP_FRAMES - 1]))),  # short
-    ]
-
-    def _w(rows, mode):
-        (
-            spark.createDataFrame(rows, "doc_id long, ts_ms long, payload binary")
-            .select("doc_id", F.timestamp_millis("ts_ms").alias("ts"), "payload")
-            .coalesce(1)
-            .write.mode(mode)
-            .parquet(str(tmp_path / "vclips"))
-        )
-
-    _w(batch1, "overwrite")
-    stream = spark.readStream.schema(
-        "doc_id long, ts timestamp, payload binary"
-    ).parquet(str(tmp_path / "vclips"))
-    q = (
-        video_neardup_dedup_stream(stream, index_sig, watermark="10 minutes")
-        .writeStream.format("memory")
-        .queryName("video_neardup")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        _w(batch2, "append")
-        q.processAllAvailable()
-        got = sorted(
-            r["doc_id"] for r in spark.sql("SELECT * FROM video_neardup").collect()
-        )
-    finally:
-        q.stop()
-
-    # batch reference: brute-force the same semantics over the arrivals
-    idx_sigs = [kernel(clip(base_vals))]
-    seen, expected = set(), []
-    for doc_id, _, payload in batch1 + batch2:
-        s = kernel(bytes(payload))
-        if s is None:
-            continue
-        if any(sum(a != b for a, b in zip(s, t)) <= 3 for t in idx_sigs):
-            continue
-        if s in seen:
-            continue
-        seen.add(s)
-        expected.append(doc_id)
-    assert expected == [2, 5]  # fixture sanity
-    assert got == expected
-
-
-@pytest.mark.slow
-def test_text_neardup_stream_suppresses_jittered_copy_vs_index(spark, tmp_path):
-    """Text wrapper for the streaming NEAR-dup ingest gate (the fourth
-    modality), stream==batch pinned across a micro-batch boundary: a
-    token-jittered copy (SimHash Hamming <= 3) of an indexed document
-    arriving in EITHER micro-batch is suppressed by the stream-static
-    band join; a distinct document passes; an exact within-stream
-    replay in a later micro-batch is suppressed by the
-    watermark-bounded exact gate; empty text drops before hashing."""
-    import pandas as pd
-
-    from video_stream_processing_spark.operators.text import simhash_udf
-    from video_stream_processing_spark.streaming.pipeline import (
-        text_neardup_dedup_stream,
-    )
-
-    BASE = 1_700_000_000_000
-    # ~60 distinct tokens: one swapped token flips only the few simhash
-    # bits that token decides, keeping the jittered copy within radius 3
-    base_text = " ".join(f"tok{i}" for i in range(60))
-    # replacement tokens pre-searched against the md5 bit contract so
-    # each jitter lands INSIDE the radius-3 gate (one swapped token
-    # flips only the bits that token decides; tok0->tok0c flips 1,
-    # tok1->tok1e flips 1)
-    jitter1 = base_text.replace("tok0 ", "tok0c ")
-    jitter2 = base_text.replace("tok1 ", "tok1e ")
-    distinct_b = " ".join(f"other{i}" for i in range(60))
-    distinct_c = " ".join(f"third{i}" for i in range(60))
-
-    def sim(txt: str) -> str:
-        return (
-            spark.createDataFrame([(txt,)], "text string")
-            .select(simhash_udf(F.col("text")).alias("sig"))
-            .collect()[0]["sig"]
-        )
-
-    def ham(a: str, b: str) -> int:
-        return sum(x != y for x, y in zip(a, b))
-
-    s_base = sim(base_text)
-    # fixture sanity: jitters inside radius 3, distinct texts far outside
-    assert 1 <= ham(sim(jitter1), s_base) <= 3
-    assert 1 <= ham(sim(jitter2), s_base) <= 3
-    assert ham(sim(distinct_b), s_base) > 3
-    assert ham(sim(distinct_c), s_base) > 3
-
-    index_sig = spark.createDataFrame([(100, s_base)], "doc_id long, sig string")
-
-    batch1 = [
-        (1, BASE, jitter1),        # near indexed doc -> drop
-        (2, BASE + 1_000, distinct_b),  # distinct -> keep
-    ]
-    batch2 = [
-        (3, BASE + 2_000, jitter2),     # near indexed doc -> drop
-        (4, BASE + 3_000, distinct_b),  # in-stream exact replay -> drop
-        (5, BASE + 4_000, distinct_c),  # distinct -> keep
-        (6, BASE + 5_000, "   "),       # whitespace-only -> drop pre-hash
-    ]
-
-    def _w(rows, mode):
-        (
-            spark.createDataFrame(rows, "doc_id long, ts_ms long, text string")
-            .select("doc_id", F.timestamp_millis("ts_ms").alias("ts"), "text")
-            .coalesce(1)
-            .write.mode(mode)
-            .parquet(str(tmp_path / "docs"))
-        )
-
-    _w(batch1, "overwrite")
-    stream = spark.readStream.schema("doc_id long, ts timestamp, text string").parquet(
-        str(tmp_path / "docs")
-    )
-    q = (
-        text_neardup_dedup_stream(stream, index_sig, watermark="10 minutes")
-        .writeStream.format("memory")
-        .queryName("txt_neardup")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        _w(batch2, "append")
-        q.processAllAvailable()
-        got = sorted(
-            r["doc_id"] for r in spark.sql("SELECT * FROM txt_neardup").collect()
-        )
-    finally:
-        q.stop()
-
-    # batch reference: same semantics brute-forced over the same arrivals
-    seen, expected = set(), []
-    for doc_id, _, txt in batch1 + batch2:
-        if not txt.strip():
-            continue
-        s = sim(txt)
-        if ham(s, s_base) <= 3:
-            continue
-        if s in seen:
-            continue
-        seen.add(s)
-        expected.append(doc_id)
-    assert expected == [2, 5]  # fixture sanity
-    assert got == expected
-
-
-@pytest.mark.slow
-def test_neardup_gate_broadcast_variant_matches_default(spark, tmp_path):
-    """broadcast_index=True is a plan hint only — the survivor set must
-    be identical to the default shuffle form on the same arrivals."""
-    from video_stream_processing_spark.streaming.pipeline import neardup_gate_stream
-
-    BASE = 1_700_000_000_000
-    sigs = [(i, BASE + i * 1000, format((i * 2654435761) % (1 << 64), "064b")) for i in range(40)]
-    index = spark.createDataFrame(
-        [(100 + i, sigs[i][2]) for i in range(0, 10)], "doc_id long, sig string"
-    )
-    (
-        spark.createDataFrame(sigs, "doc_id long, ts_ms long, sig string")
-        .select("doc_id", F.timestamp_millis("ts_ms").alias("ts"), "sig")
-        .coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "sigs"))
-    )
-
-    def run(broadcast, name):
-        stream = spark.readStream.schema("doc_id long, ts timestamp, sig string").parquet(
-            str(tmp_path / "sigs")
-        )
-        q = (
-            neardup_gate_stream(stream, index, broadcast_index=broadcast)
-            .writeStream.format("memory").queryName(name)
-            .option("checkpointLocation", str(tmp_path / f"ck-{name}"))
-            .outputMode("append").start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return sorted(r["doc_id"] for r in spark.sql(f"SELECT * FROM {name}").collect())
-
-    got_default = run(False, "gate_def")
-    got_bcast = run(True, "gate_bc")
-    assert got_default == got_bcast
-    # fixture sanity: the 10 indexed arrivals are suppressed, the rest pass
-    assert got_default == list(range(10, 40))

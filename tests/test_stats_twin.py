@@ -113,28 +113,3 @@ def test_arrow_twin_invariant_to_tiny_batches(spark, sf_dir):
         else:
             spark.conf.unset(key)
     assert base == tiny
-
-
-def test_shard_partials_merge_losslessly(spark, sf_dir):
-    """Incremental maintenance: persisting per-shard sufficient
-    statistics and merging them yields EXACTLY the whole-corpus
-    covariance — no re-scan of old shards (the x71/x106 discipline
-    applied to the PCA statistics)."""
-    from video_stream_processing_spark.operators.stats import (
-        covariance_shard_partials,
-        finish_covariance,
-        merge_covariance_partials,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    whole = {
-        (r["i"], r["j"]): r["cov"]
-        for r in covariance_upper_triangle_arrow(emb).collect()
-    }
-    shards = [emb.where(f"vec_id % 3 = {m}") for m in range(3)]
-    parts = [covariance_shard_partials(s) for s in shards]
-    merged = {
-        (r["i"], r["j"]): r["cov"]
-        for r in finish_covariance(merge_covariance_partials(*parts)).collect()
-    }
-    assert whole == merged

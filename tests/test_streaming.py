@@ -11,7 +11,9 @@ batch implementations on identical input.
 
 from __future__ import annotations
 
+import ast
 import os
+import tokenize
 
 import pytest
 
@@ -153,7 +155,11 @@ def test_detections_fact_sink_layout(spark, tmp_path):
 
 
 def test_segments_sink_object_key_and_encoder(spark, tmp_path):
-    from video_stream_processing_spark.streaming.sinks import NoopEncoder, write_segments
+    from video_stream_processing_spark.streaming.sinks import (
+        NoopEncoder,
+        object_key,
+        write_segments,
+    )
 
     batch = spark.createDataFrame(
         [("cam1", "2024-03-05 14:30:00", "2024-03-05 14:33:00", 450, 180_000, "size")],
@@ -172,6 +178,7 @@ def test_segments_sink_object_key_and_encoder(spark, tmp_path):
     row = spark.read.parquet(out_dir).collect()[0]
     start_ms = 1709649000000  # 2024-03-05T14:30:00Z
     assert row["object_key"] == f"videos/cam1/20240305/14/cam1_{start_ms}.mp4"
+    assert row["object_key"] == object_key("cam1", start_ms, "20240305/14")
     assert row["file_size"] == 450 * 1024  # NoopEncoder: frame_count * 1024
     assert row["local_file_path"].endswith(f"cam1_{start_ms}.mp4")
 
@@ -184,3 +191,59 @@ def test_rate_frames_schema(spark):
     assert [f.name for f in df.schema.fields] == [
         "stream_id", "frame_id", "ts", "scene_signal", "frame_data",
     ]
+
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Public streaming definitions that only tests call, kept because each
+# mirrors a piece of the reference job.
+TEST_ONLY_MIRRORS = {
+    "flagship_job_stream": "the reference's whole job as one graph (VideoStreamProcessingJob.java:60-102)",
+    "write_detections_ndjson": "the Doris Stream-Load NDJSON wire format (DorisSinkBuilder.java:62-65)",
+    "FFmpegEncoder": "the reference's ffmpeg segment encode (FFmpegUtils.java:137-189)",
+    "object_key": "the reference's object-key format (MinIOVideoSink.java:50-59); write_segments builds it as a Column",
+}
+
+
+def _code_names() -> dict[str, list[tuple[str, int]]]:
+    """path -> (identifier, line) of every name token in the code (not
+    docstrings or comments) of the package, tools/, perfbench/ and
+    bench.py, test directories excluded."""
+    paths = [os.path.join(ROOT, "bench.py")]
+    for top in ("video_stream_processing_spark", "tools", "perfbench"):
+        for d, dirs, files in os.walk(os.path.join(ROOT, top)):
+            dirs[:] = [x for x in dirs if x != "tests"]
+            paths += [os.path.join(d, f) for f in files if f.endswith(".py")]
+    names = {}
+    for p in paths:
+        with open(p) as f:
+            toks = tokenize.generate_tokens(f.readline)
+            names[p] = [(t.string, t.start[0]) for t in toks if t.type == tokenize.NAME]
+    return names
+
+
+def test_streaming_surface_is_reachable():
+    """Every public top-level function or class in streaming/ is used by
+    the code of a non-test file outside its own definition, or is listed
+    in TEST_ONLY_MIRRORS: a streaming twin that only its own test calls
+    fails here."""
+    names = _code_names()
+    streaming = os.path.join(ROOT, "video_stream_processing_spark", "streaming")
+    defined, unreached = set(), []
+    for path in sorted(p for p in names if os.path.dirname(p) == streaming):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in tree.body:
+            if not isinstance(node, (ast.FunctionDef, ast.ClassDef)) or node.name.startswith("_"):
+                continue
+            defined.add(node.name)
+            span = range(node.lineno, node.end_lineno + 1)
+            named = any(
+                name == node.name and not (p == path and line in span)
+                for p, toks in names.items()
+                for name, line in toks
+            )
+            if not named and node.name not in TEST_ONLY_MIRRORS:
+                unreached.append(f"{os.path.basename(path)}:{node.name}")
+    assert not unreached, f"streaming definitions only tests reach: {unreached}"
+    assert set(TEST_ONLY_MIRRORS) <= defined

@@ -147,56 +147,6 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     assert got == {1: 1, 2: 1, 3: 1}
 
 
-def test_stream_stream_attribution_join(spark, tmp_path):
-    """Stream-stream join with watermarks (streaming twin of b34):
-    purchases joined to preceding same-user clicks; results match the
-    equivalent batch join over the same data."""
-    pd_dir, ck = str(tmp_path / "purchases"), str(tmp_path / "ckj")
-    cl_dir = str(tmp_path / "clicks")
-
-    def write(d, rows):
-        (
-            spark.createDataFrame(rows, "user_id long, ts_ms long, event_id long")
-            .select("user_id", F.timestamp_millis("ts_ms").alias("ts"), "event_id")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(d)
-        )
-
-    write(pd_dir, [(1, BASE + 3_600_000, 100), (1, BASE + 8_000_000, 101), (2, BASE + 3_600_000, 102)])
-    write(cl_dir, [
-        (1, BASE + 3_000_000, 200),  # 10 min before purchase 100 -> match
-        (1, BASE + 1, 201),          # ~1h before 100 -> inside window -> match
-        (1, BASE + 7_900_000, 202),  # before purchase 101 -> match
-        (2, BASE + 7_000_000, 203),  # AFTER user-2's purchase -> no match
-    ])
-
-    from video_stream_processing_spark.streaming.pipeline import attribution_join_stream
-
-    schema = "user_id long, ts timestamp, event_id long"
-    joined = attribution_join_stream(
-        spark.readStream.schema(schema).parquet(pd_dir),
-        spark.readStream.schema(schema).parquet(cl_dir),
-    )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("attrib")
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        (r["purchase_id"], r["click_id"])
-        for r in spark.sql("SELECT * FROM attrib").collect()
-    }
-    assert got == {(100, 200), (100, 201), (101, 202)}
-
-
 def test_streaming_session_window_matches_batch(spark, tmp_path):
     """F.session_window in streaming mode: gap-based sessions close once
     the watermark passes gap beyond their last event, and the closed

@@ -1,7 +1,8 @@
 """The measuring and plan-inspection tools, run in-process on the suite's
 session: the plan dumper (final plan plus one plan per staged frame),
-bench.py's named-query timing, the status-store stage profiler and the
-plan audit's generator-filter column."""
+bench.py's named-query timing, the stream throughput paths, the
+status-store stage profiler and the plan audit's generator-filter
+column."""
 
 from __future__ import annotations
 
@@ -17,6 +18,7 @@ sys.path.insert(0, os.path.join(ROOT, "tools"))
 import dump_plans  # noqa: E402
 import plan_audit  # noqa: E402
 import profile_query  # noqa: E402
+import stream_bench  # noqa: E402
 
 
 def test_dump_plans_writes_final_and_staged_frame_plans(spark, sf_dir, tmp_path):
@@ -61,6 +63,26 @@ def test_bench_named_queries_leave_detail_artifact_alone(spark, sf_dir, monkeypa
     assert len(out["probe_sec"]) == 3
     assert out["sf_dir"] == sf_dir
     assert (os.stat(detail).st_mtime_ns, open(detail).read()) == before
+
+
+def test_stream_bench_measures_every_path(spark, sf_dir, monkeypatch):
+    # the detection path's frame must come from detection_query's own
+    # builder: spy on it and check the frame carries the fact columns
+    build, built = stream_bench.detections_stream, []
+
+    def spy(*args, **kwargs):
+        built.append(build(*args, **kwargs))
+        return built[-1]
+
+    monkeypatch.setattr(stream_bench, "detections_stream", spy)
+    res = stream_bench.measure(spark, sf_dir, paths=stream_bench.ALL_PATHS)
+    assert res["n_frames"] > 0
+    assert set(res) == {"n_frames", *stream_bench.ALL_PATHS}
+    assert len(stream_bench.ALL_PATHS) == 4
+    for name in stream_bench.ALL_PATHS:
+        assert res[name]["frames_per_sec"] > 0, name
+    assert len(built) == 1
+    assert built[0].columns == ["stream_id", "detection_time", "object_class", "confidence"]
 
 
 def test_profile_query_reads_stages_without_ui(spark, sf_dir):

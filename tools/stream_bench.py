@@ -1,7 +1,10 @@
 #!/usr/bin/env python
 """Streaming-mode throughput check: replay the events table as a frame
-stream through the stateful keyframe gate and the exact segment operator
-(the two applyInPandasWithState paths), and report end-to-end frames/s.
+stream through four paths and report end-to-end frames/s for each: the
+stateful keyframe gate and the exact segment operator (the two
+applyInPandasWithState paths), the full detection path (the frame
+``streaming/pipeline.detections_stream`` builds for ``detection_query``)
+and the near-dup ingest gate.
 
 Reference design point: 25 fps x 3 streams = 75 frames/s
 (BASELINE.md; VideoStreamMockProducer defaults). Prints one JSON line.
@@ -27,13 +30,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from video_stream_processing_spark.session import get_spark
+from video_stream_processing_spark.streaming.pipeline import (
+    detections_stream,
+    neardup_gate_stream,
+)
+from video_stream_processing_spark.streaming.stateful import (
+    exact_segments_stream,
+    keyframes_stream,
+)
 from video_stream_processing_spark.tables import load_table
 
 ALL_PATHS = (
     "keyframe_gate",
     "exact_segments",
     "full_detection_path",
-    "funnel_cep",
     "neardup_gate",
 )
 
@@ -57,50 +67,9 @@ def measure(spark, sf_dir: str, paths: tuple[str, ...] = ALL_PATHS) -> dict:
             .parquet(frames_dir)
         )
 
-        from video_stream_processing_spark.streaming.stateful import (
-            exact_segments_stream,
-            keyframes_stream,
-        )
-
         stream = spark.readStream.schema(
             "stream_id string, ts timestamp, scene_signal double"
         ).parquet(frames_dir)
-
-        def full_detection_path():
-            """gate -> stub-UDF inference -> NMS -> explode (the §3.2 hot
-            path, exactly as streaming/pipeline.detection_query wires it)."""
-            from video_stream_processing_spark.operators.detection import (
-                nms_udf,
-                stub_detect_udf,
-            )
-
-            gated = keyframes_stream(stream, 300_000, 50.0).where(F.col("is_keyframe"))
-            with_vec = gated.withColumn(
-                "embedding",
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(15)),
-                    lambda i: ((F.col("scene_signal") + i) % 7 - 3).cast("float") / 3.0,
-                ),
-            )
-            detect = stub_detect_udf()
-            nms = nms_udf()
-            return with_vec.select(
-                "stream_id", F.explode(nms(detect(F.col("embedding")))).alias("d")
-            )
-
-        def funnel_path():
-            """view->click->purchase CEP state machine (b55's streaming
-            twin) — per-user O(1) state, event-time timeout expiry."""
-            from video_stream_processing_spark.streaming.stateful import funnel_stream
-
-            events_dir = os.path.join(work, "events")
-            ev.select("user_id", "event_type", "ts").write.mode("overwrite").parquet(
-                events_dir
-            )
-            ev_stream = spark.readStream.schema(
-                "user_id long, event_type string, ts timestamp"
-            ).parquet(events_dir)
-            return funnel_stream(ev_stream)
 
         def neardup_gate_path():
             """The streaming NEAR-dup ingest gate (the r13/r14 flagship
@@ -113,9 +82,6 @@ def measure(spark, sf_dir: str, paths: tuple[str, ...] = ALL_PATHS) -> dict:
             materializes once at graph build (amortized across a real
             deployment's micro-batches), so it is outside the timed
             window by construction of `builders[name]()`."""
-            from video_stream_processing_spark.streaming.pipeline import (
-                neardup_gate_stream,
-            )
 
             def sig64(*cols):
                 return F.lpad(F.bin(F.xxhash64(*cols)), 64, "0")
@@ -143,8 +109,9 @@ def measure(spark, sf_dir: str, paths: tuple[str, ...] = ALL_PATHS) -> dict:
             "exact_segments": lambda: exact_segments_stream(
                 stream.select("stream_id", "ts")
             ),
-            "full_detection_path": full_detection_path,
-            "funnel_cep": funnel_path,
+            # gate -> stub-UDF inference -> NMS -> explode (the §3.2 hot
+            # path), built by detection_query's own builder
+            "full_detection_path": lambda: detections_stream(stream, 300_000, 50.0),
             "neardup_gate": neardup_gate_path,
         }
 

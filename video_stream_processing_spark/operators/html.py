@@ -117,10 +117,9 @@ def main_text_col(
     min_words: int = DEFAULT_MIN_WORDS,
 ) -> Column:
     """Just the extracted main text, as a standalone stateless Column —
-    the same expression html_extract emits, packaged so a STREAMING
-    projection can run extraction inline (curation_stream's html stage;
-    it is pure per-row string/array work, so it needs no state and no
-    twin semantics)."""
+    the same expression html_extract emits, packaged so a projection
+    can run extraction inline (x130's extract -> filter chain; it is
+    pure per-row string/array work, so it needs no state)."""
     H = F.coalesce(F.col(html_col), F.lit(""))
     kept = _kept_blocks(_block_stats(H), max_link_density, min_words)
     return F.array_join(F.transform(kept, lambda s: s["t"]), "\n")

@@ -604,10 +604,8 @@ def video_fingerprints(df: DataFrame) -> DataFrame:
 
 
 def make_clip_sig_kernel():
-    """The per-clip video-fingerprint kernel shared by the batch lane
-    (``video_fingerprints`` / x140) and the streaming ingest gate
-    (streaming/pipeline.py:video_neardup_dedup_stream) — ONE definition,
-    two surfaces, so stream == batch by construction. Returns a
+    """The per-clip video-fingerprint kernel of the batch lane
+    (``video_fingerprints`` / x140). Returns a
     ``bytes -> sig-or-None`` callable that demuxes a concatenated-JPEG
     clip on EOI markers, decodes every frame through the production
     JPEG codec, reduces each to its integer mean intensity (sum //

@@ -30,11 +30,9 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "covariance_partials",
-    "covariance_shard_partials",
     "covariance_upper_triangle_arrow",
     "covariance_upper_triangle_jvm",
     "finish_covariance",
-    "merge_covariance_partials",
     "pca_project",
     "train_pca",
 ]
@@ -175,19 +173,6 @@ def covariance_upper_triangle_arrow(
     return finish_covariance(covariance_partials(raw), quant=quant)
 
 
-def covariance_shard_partials(
-    emb: DataFrame,
-    dim: int = 64,
-    embedding_col: str = "embedding",
-    quant: float = 1e6,
-) -> DataFrame:
-    """One shard's collapsed sufficient-statistics table (2080 rows for
-    dim=64) — the artifact to persist per ingest; see
-    covariance_partials for the merge/finish contract."""
-    raw = _raw_covariance_batches(emb, dim=dim, embedding_col=embedding_col, quant=quant)
-    return covariance_partials(raw)
-
-
 def covariance_partials(raw_parts: DataFrame) -> DataFrame:
     """Collapse per-batch partial rows to one (i, j, n, si, sj, sxy) row
     per cell — a MERGEABLE sufficient-statistics table (exact decimal
@@ -195,8 +180,7 @@ def covariance_partials(raw_parts: DataFrame) -> DataFrame:
     ingested shard: union any number of shard partial tables, re-apply
     this collapse, and ``finish_covariance`` yields exactly the
     whole-corpus covariance — no re-scan of old shards (the x71/x106
-    incremental-maintenance discipline; losslessness pinned in
-    tests/test_stats_twin.py). Accepts either raw per-batch rows or
+    incremental-maintenance discipline). Accepts either raw per-batch rows or
     already-collapsed partials (merging is the same aggregation)."""
     # each batch emits exactly one row per (i, j), so summing pn per key
     # recovers the total row count; decimal sums keep the cross-batch
@@ -205,22 +189,6 @@ def covariance_partials(raw_parts: DataFrame) -> DataFrame:
     return raw_parts.groupBy("i", "j").agg(
         dec("pn"), dec("psi"), dec("psj"), dec("psxy")
     )
-
-
-def merge_covariance_partials(*partials: DataFrame) -> DataFrame:
-    """Merge shard partial tables (union + re-collapse; exact)."""
-    out = partials[0]
-    for p in partials[1:]:
-        out = out.unionByName(p)
-    renamed = out.select(
-        "i",
-        "j",
-        F.col("n").alias("pn"),
-        F.col("si").alias("psi"),
-        F.col("sj").alias("psj"),
-        F.col("sxy").alias("psxy"),
-    )
-    return covariance_partials(renamed)
 
 
 def finish_covariance(partials: DataFrame, quant: float = 1e6) -> DataFrame:

@@ -256,8 +256,7 @@ SELECT doc_id, sig AS simhash FROM sig
 
 
 # --------------------------------------------------------------------------
-# Curation building blocks shared by the batch queries (x16/x34/x35) and
-# the streaming twin (streaming/pipeline.py:curation_stream)
+# Curation building blocks shared by the batch queries (x16/x34/x35)
 # --------------------------------------------------------------------------
 
 
@@ -299,9 +298,8 @@ def curation_rules_over_tokens(toks: Column) -> dict[str, Column]:
 
 def curation_rules(text_col: str = "text") -> dict[str, Column]:
     """C4/Gopher-style keep rules as named boolean Columns — the single
-    definition the batch filter chain (x34), the composed pipeline (x35)
-    and the streaming twin all share, so the three surfaces cannot
-    drift."""
+    definition the batch filter chain (x34) and the composed pipeline
+    (x35) share, so the two surfaces cannot drift."""
     return curation_rules_over_tokens(tokens_col(text_col))
 
 
@@ -393,8 +391,7 @@ FROM scored GROUP BY doc_id
 # Per-source quality-quantile pruning (x112) as reusable sufficient
 # statistics: histogram -> merge -> decision. The histogram is the ONLY
 # corpus-sized pass; it is exact-integer mergeable across shards and
-# micro-batches (streaming/pipeline.py:quality_histogram_sink), so the
-# prune decision can always be recomputed from stored partials without
+# micro-batches, so the prune decision can always be recomputed from stored partials without
 # re-scanning history — the same stored-partials discipline as the
 # covariance statistics (operators/stats.py).
 # --------------------------------------------------------------------------
@@ -611,73 +608,6 @@ FROM base d LEFT JOIN w ON d.doc_id = w.doc_id
 """
 
 
-
-def dsir_fit_log_ratios(
-    docs: DataFrame,
-    target_pred: Column,
-    text_col: str = "text",
-    n_buckets: int = DSIR_BUCKETS,
-) -> list[float]:
-    """Batch fit of the DSIR bucket model ALONE: the per-bucket
-    target-vs-raw log ratios (same features, hashing, and add-1
-    smoothing as dsir_weights) collected as a plain ``n_buckets``-long
-    list — the broadcastable model state for streaming/stateless
-    scoring (dsir_score_col). Buckets unseen in the fit corpus keep the
-    pure-smoothing ratio ln(1/(tot_t+B)) - ln(1/(tot_r+B))."""
-    import math
-
-    feats = F.concat(tokens_col(text_col), shingles(text_col, 2))
-    fx = (
-        docs.select(target_pred.alias("is_target"), F.explode_outer(feats).alias("f"))
-        .where(F.col("f").isNotNull())  # dedup._minhash_wide explode note
-        .select("is_target", _dsir_bucket(F.col("f"), n_buckets).alias("b"))
-    )
-    stats = fx.groupBy("b").agg(
-        F.count(F.lit(1)).alias("cr"),
-        F.sum(F.when(F.col("is_target"), 1).otherwise(0)).alias("ct"),
-    )
-    rows = stats.collect()
-    tot_r = float(sum(r["cr"] for r in rows))
-    tot_t = float(sum(r["ct"] for r in rows))
-    by_b = {int(r["b"]): (float(r["cr"]), float(r["ct"])) for r in rows}
-    out = []
-    for b in range(n_buckets):
-        cr, ct = by_b.get(b, (0.0, 0.0))
-        out.append(
-            math.log((ct + 1) / (tot_t + n_buckets))
-            - math.log((cr + 1) / (tot_r + n_buckets))
-        )
-    return out
-
-
-def dsir_score_col(
-    lr: list[float], text_col: str = "text", n_buckets: int = DSIR_BUCKETS
-) -> Column:
-    """Stateless per-row DSIR log-weight under a FIXED (batch-fit)
-    model: one literal-Catalyst array lookup per feature inside a
-    single F.aggregate — no explode, no join, no state, so it drops
-    straight into a streaming projection (the curation_stream twin of
-    x116). The 512-literal array is constant-folded once by Catalyst;
-    the 4-dp round matches dsir_weights' output grid. Matches the batch
-    log_weight whenever the model was fit on the same corpus (pinned in
-    tests/test_curation_stream.py)."""
-    if len(lr) != n_buckets:
-        raise ValueError(f"model has {len(lr)} buckets, expected {n_buckets}")
-    arr = F.expr(
-        "array(" + ",".join(f"CAST('{v!r}' AS DOUBLE)" for v in lr) + ")"
-    )
-    feats = F.concat(tokens_col(text_col), shingles(text_col, 2))
-    return F.round(
-        F.aggregate(
-            feats,
-            F.lit(0.0),
-            lambda acc, f: acc
-            + F.element_at(arr, (_dsir_bucket(f, n_buckets) + 1).cast("int")),
-        ),
-        4,
-    )
-
-
 # --------------------------------------------------------------------------
 # Gopher quality rules (Rae et al. 2021, Table A1 — the named rule-based
 # document filter of the public LLM-curation literature)
@@ -688,10 +618,8 @@ GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
 def _gopher_exprs(text_col: str = "text") -> dict[str, Column]:
-    """The Gopher rule expressions as pure per-row Columns — shared by
-    the batch report (gopher_rules/x118) and the streaming twin
-    (streaming/pipeline.py:curation_stream), one definition, two
-    surfaces."""
+    """The Gopher rule expressions as pure per-row Columns, evaluated by
+    the batch report (gopher_rules/x118)."""
     t = tokens_col(text_col)
     wc = F.size(t)
     sum_len = F.aggregate(
@@ -748,12 +676,6 @@ def _gopher_exprs(text_col: str = "text") -> dict[str, Column]:
         "symbol_ratio": sym_ratio,
         "keep": keep,
     }
-
-
-def gopher_keep(text_col: str = "text") -> Column:
-    """The Gopher filter conjunction as a stateless per-row Column (the
-    streaming-twin surface of x118)."""
-    return _gopher_exprs(text_col)["keep"]
 
 
 def gopher_rules(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -862,7 +784,7 @@ def quality_classifier_fit(
     6-dp-rounded logistic gradient steps (see quality_classifier for
     the full discipline). Returns {bucket: weight} with the intercept
     at bucket -1 — the <= n_buckets+1-float broadcastable model for
-    stateless/streaming scoring (quality_score_col)."""
+    stateless scoring (quality_score_col)."""
     import math
 
     base = docs.select("doc_id", curated_pred.cast("double").alias("y"), tokens_col(text_col).alias("t"))
@@ -920,10 +842,8 @@ def quality_score_col(
 ) -> Column:
     """Stateless per-row x119 quality score under a FIXED trained
     model: sigmoid(intercept + sum over distinct-token presence buckets
-    of the literal weight) — no explode, no join, no state, so it drops
-    straight into a streaming projection (the curation_stream twin of
-    x119, same pattern as dsir_score_col). 4-dp round matches the
-    batch query's output grid."""
+    of the literal weight) — no explode, no join, no state. 4-dp round
+    matches the batch query's output grid."""
     vals = ",".join(
         f"CAST('{w.get(b, 0.0)!r}' AS DOUBLE)" for b in range(n_buckets)
     )
@@ -983,8 +903,7 @@ def quality_classifier(
     (quality_classifier_fit) is per-round one pass over a checkpointed
     (doc, bucket) presence table + a 65-row collect; scoring is the
     STATELESS per-row quality_score_col (literal-array lookup, zero
-    Python, zero joins — the same column the streaming twin uses, so
-    batch and stream cannot drift); the final window is partitioned by
+    Python, zero joins); the final window is partitioned by
     source, never corpus-wide.
     """
     w = quality_classifier_fit(docs, curated_pred, text_col, n_buckets, gd_rounds, lr)
@@ -1522,104 +1441,3 @@ SELECT CAST(sum(p) AS BIGINT) AS n_pos, CAST(sum(n) AS BIGINT) AS n_neg,
        round(sum(u2) * 1.0 / (sum(p) * sum(n)) - 1.0, 6) AS gini
 FROM u
 """
-
-
-def nb_langid_fit(
-    docs: DataFrame,
-    text_col: str = "text",
-    lang_col: str = "lang",
-    n_buckets: int = NBLID_BUCKETS,
-) -> dict:
-    """Fit the x120 naive-Bayes langid model on a STATIC corpus and
-    package it as bounded plain state for stateless stream scoring
-    (the dsir_model/qc_model pattern): same md5 trigram buckets, same
-    exact integer counts, same add-1 smoothed ln((c+1)/(C+n_buckets))
-    log-probs and ln(n_lang/n) priors as nb_langid's in-query training
-    — so the literal weight arrays the stream scores with are the SAME
-    numbers the batch query inlines.
-
-    Returns {"n_buckets", "langs", "prior": {lang: f},
-    "logp": {lang: [f]*n_buckets}} — <= langs x n_buckets floats,
-    broadcastable driver-side metadata at any corpus size."""
-    import math
-
-    txt = F.col(text_col)
-    tris = F.when(
-        F.length(txt) >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.length(txt) - 2),
-            lambda i: txt.substr(i, F.lit(3)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    bc = (
-        docs.select(F.col(lang_col).alias("lang"), F.explode_outer(tris).alias("tri"))
-        .where(F.col("tri").isNotNull())  # dedup._minhash_wide explode note
-        .select("lang", _dsir_bucket(F.col("tri"), n_buckets).alias("b"))
-        .groupBy("lang", "b")
-        .agg(F.count(F.lit(1)).alias("mc"))
-        .collect()
-    )
-    lang_rows = (
-        docs.groupBy(F.col(lang_col).alias("lang"))
-        .agg(F.count(F.lit(1)).alias("nd"))
-        .collect()
-    )
-    n_total = float(sum(r["nd"] for r in lang_rows))
-    langs = sorted(r["lang"] for r in lang_rows)
-    prior = {r["lang"]: math.log(float(r["nd"]) / n_total) for r in lang_rows}
-    counts: dict = {}
-    cl = {lang: 0.0 for lang in langs}
-    for r in bc:
-        counts[(r["lang"], int(r["b"]))] = float(r["mc"])
-        cl[r["lang"]] += float(r["mc"])
-    logp = {
-        lang: [
-            math.log((counts.get((lang, b), 0.0) + 1) / (cl[lang] + n_buckets))
-            for b in range(n_buckets)
-        ]
-        for lang in langs
-    }
-    return {"n_buckets": n_buckets, "langs": langs, "prior": prior, "logp": logp}
-
-
-def nb_langid_score_col(model: dict, text_col: str = "text") -> Column:
-    """Stateless per-row x120 prediction under a FIXED model from
-    nb_langid_fit: struct(s4, cand) = the argmax language, scored as
-    round(prior + sum over trigram occurrences of the literal
-    bucket log-prob, 4) with nb_langid's exact tie rule (array_max
-    breaks 4-dp score ties to the lexicographically LAST language).
-    No explode, no join, no state — drops straight into a streaming
-    projection (the x119 quality_score_col pattern)."""
-    n_buckets = model["n_buckets"]
-    txt = F.col(text_col)
-    tris = F.when(
-        F.length(txt) >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.length(txt) - 2),
-            lambda i: txt.substr(i, F.lit(3)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    def lang_sum(arr: Column) -> Column:
-        # closure, not a default arg: pyspark derives HOF arity from the
-        # lambda's parameter count, so `lambda acc, tri, arr=arr` would
-        # bind as a 3-arg lambda and fail analysis
-        return F.aggregate(
-            tris,
-            F.lit(0.0),
-            lambda acc, tri: acc
-            + F.element_at(arr, (_dsir_bucket(tri, n_buckets) + 1).cast("int")),
-        )
-
-    cands = []
-    for lang in model["langs"]:
-        vals = ",".join(
-            f"CAST('{v!r}' AS DOUBLE)" for v in model["logp"][lang]
-        )
-        s = lang_sum(F.expr(f"array({vals})"))
-        cands.append(
-            F.struct(
-                F.round(s + F.lit(model["prior"][lang]), 4).alias("s4"),
-                F.lit(lang).alias("cand"),
-            )
-        )
-    return F.array_max(F.array(*cands))

@@ -302,34 +302,6 @@ def unigram_vocab_table(spark: SparkSession, docs: DataFrame, **kw) -> DataFrame
     )
 
 
-def unigram_pieces_col(
-    vocab: dict[str, float],
-    text_col: str = "text",
-    max_piece_len: int = MAX_PIECE_LEN,
-) -> Column:
-    """Stateless per-row total Viterbi piece count under a FIXED
-    trained vocab (unsegmentable words fall back to their char length,
-    exactly as unigram_tokenize counts them) — the x129 streaming twin
-    column: no explode, no join, no state, so it drops straight into a
-    streaming projection (the x119/x120 twin pattern). The batch query
-    computes n_pieces through this SAME expression, so the two surfaces
-    cannot drift."""
-    vm = _vocab_map(vocab)
-    tl = _word_tokens(text_col)
-
-    def pieces_len(t: Column) -> Column:
-        b = viterbi_best(t, vm, max_piece_len)
-        return F.when(
-            b["s"] > F.lit(_SENTINEL / 2), F.size(F.split(b["g"], r"\|"))
-        ).otherwise(F.length(t))
-
-    return F.aggregate(
-        F.transform(tl, pieces_len),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v.cast("long"),
-    )
-
-
 def unigram_tokenize(
     docs: DataFrame,
     vocab: dict[str, float],

@@ -4618,9 +4618,7 @@ def x112_source_quality_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast hash join on (source) + one scalar comparison per row
     — here the report is the deliverable, so only the bounded side
     materializes. The histogram is an exact-integer MERGEABLE
-    sufficient statistic (operators/text.py:merge_quality_histograms;
-    streaming twin streaming/pipeline.py:quality_histogram_sink —
-    stream == batch pinned in tests/test_streaming_quality.py)."""
+    sufficient statistic (operators/text.py:merge_quality_histograms)."""
     docs = load_table(spark, sf_dir, "documents")
     return T.quality_prune_report(
         T.quality_histogram(docs), keep_frac=PRUNE_KEEP_FRAC

@@ -77,119 +77,6 @@ def write_detections_fact_idempotent(out_dir: str):
     return sink
 
 
-def write_docs_idempotent(out_dir: str):
-    """Generic idempotent foreachBatch sink for document-shaped streams
-    (the incremental-dedup twin's landing table): every micro-batch
-    overwrites its own batch-id-keyed partition, so a replay after a
-    failure between sink-write and checkpoint commit lands in the same
-    place instead of appending duplicates. Same exactly-once mechanism
-    as write_detections_fact_idempotent, schema-agnostic."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        _overwrite_batch(batch_df, batch_id, out_dir)
-
-    return sink
-
-
-def lsh_index_refresh_sink(
-    index_dir: str,
-    docs_dir: str,
-    pairs_dir: str,
-    text_col: str = "text",
-    threshold: float | None = None,
-):
-    """foreachBatch sink — the STREAMING twin of x106
-    (operators/dedup.py:incremental_lsh_neardups): maintains a stored
-    LSH band index across micro-batches and emits, per batch, the
-    near-dup pairs that batch INTRODUCES (vs all earlier batches, and
-    within itself).
-
-    Per micro-batch (docs with (doc_id, ``text_col``)):
-    1. land the batch's docs at ``docs_dir`` (batch-id partition,
-       dynamic overwrite — replay lands in place);
-    2. minhash+band ONLY the batch's docs; candidates = batch bands
-       equi-joined against the STORED index's earlier-batch partitions
-       (``__batch_id < batch_id`` — partition-pruned, and the guard that
-       makes a replayed batch skip its own already-written bands), plus
-       the in-batch bucket self-join;
-    3. exact-Jaccard verification joins candidate doc ids back to the
-       landed docs table (bodies re-read for CANDIDATES only — keyed
-       join, never a corpus re-hash);
-    4. append the batch's bands to the index and the verified pairs to
-       ``pairs_dir``, both batch-id-keyed dynamic overwrite, so
-       replay after a failure between sink-write and checkpoint commit
-       is idempotent end-to-end.
-
-    The union of all batches' emitted pairs equals the FULL-corpus
-    ``minhash_lsh_neardups`` pair set over the streamed docs (each pair
-    surfaces exactly when its later member arrives) — pinned by
-    tests/test_curation_stream.py::test_lsh_index_refresh_stream."""
-    from video_stream_processing_spark.operators.dedup import (
-        JACCARD_THRESHOLD,
-        SHINGLE_K,
-        _band_buckets,
-        _bucket_join,
-        _exact_jaccard_on_candidates,
-        _minhash_wide,
-    )
-
-    thr = JACCARD_THRESHOLD if threshold is None else threshold
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # scoped checkpoint release: each micro-batch creates eager
-        # localCheckpoints (batch docs, band table, candidate verify)
-        # whose blocks the async ContextCleaner frees too slowly — a
-        # long-running stream would accumulate one block set per batch.
-        # Snapshot the persistent ids on entry and unpersist only what
-        # this batch created once its writes are committed.
-        from video_stream_processing_spark.session import (
-            release_since,
-            snapshot_persistent_ids,
-        )
-
-        pre_ids = snapshot_persistent_ids(spark)
-        batch_df = batch_df.localCheckpoint(eager=True)
-        _overwrite_batch(batch_df, batch_id, docs_dir)
-        bands = _band_buckets(_minhash_wide(batch_df, text_col)).localCheckpoint(
-            eager=True
-        )
-        in_batch = _bucket_join(bands).withColumn("vs_existing", F.lit(False))
-        try:
-            prior = spark.read.parquet(index_dir).where(F.col("__batch_id") < batch_id)
-        except Exception:  # first batch: no index yet
-            prior = None
-        if prior is not None:
-            cross = (
-                bands.alias("s")
-                .join(prior.alias("b"), ["band_id", "band_key"])
-                .select(
-                    F.least(F.col("s.doc_id"), F.col("b.doc_id")).alias("doc_a"),
-                    F.greatest(F.col("s.doc_id"), F.col("b.doc_id")).alias("doc_b"),
-                )
-                .distinct()
-                .withColumn("vs_existing", F.lit(True))
-            )
-            cand = cross.unionByName(in_batch)
-        else:
-            cand = in_batch
-        _overwrite_batch(bands, batch_id, index_dir)
-        all_docs = spark.read.parquet(docs_dir).where(F.col("__batch_id") <= batch_id)
-        # candidates-only verify (shared batch helper): shingle ONLY docs
-        # in a candidate pair — the previous inline form tokenized the
-        # WHOLE landed corpus once per join branch every micro-batch,
-        # exactly the corpus re-hash the docstring forbids
-        pairs = _exact_jaccard_on_candidates(
-            cand, all_docs, text_col, SHINGLE_K, thr
-        ).select("doc_a", "doc_b", "jaccard", "vs_existing")
-        _overwrite_batch(pairs, batch_id, pairs_dir)
-        # collect_gc=False: no full driver GC on the micro-batch critical
-        # path — the unpersist walk alone frees the executor blocks
-        release_since(spark, pre_ids, collect_gc=False)
-
-    return sink
-
-
 def write_detections_ndjson(out_dir: str):
     """foreachBatch sink emitting the reference's LITERAL wire format:
     one JSON object per line (`format=json` + `read_json_by_line=true`

@@ -1,13 +1,15 @@
 """Stateful streaming operators — exact reference semantics in
 Structured Streaming via ``applyInPandasWithState``.
 
-Two stateful pieces mirror the reference's KeyedProcessFunction
-(/root/reference/src/main/java/com/video/streaming/function/
-VideoProcessFunction.java):
+The module holds the two stateful pieces of the reference's
+KeyedProcessFunction (src/main/java/com/video/streaming/function/
+VideoProcessFunction.java) and nothing else:
 
 - keyframe gate: per-key (lastKeyFrameTime, previousSignal) state
   (KeyFrameExtractor.java:53-82), intent semantics per key — NOT the
-  reference's per-subtask shared state bug (SURVEY.md §2.6(b));
+  reference's per-subtask shared state bug (SURVEY.md §2.6(b)); the
+  binary-driven variant carries the previous frame's histogram instead
+  of its signal;
 - segment buffer: first-arrival-aligned, trigger-INCLUSIVE 3-minute
   windows (VideoSegmentBuffer.java:38-105, add-then-check order at
   VideoProcessFunction.java:88-91), with an event-time timeout flushing
@@ -258,230 +260,4 @@ def keyframes_stream(
     return _with_state(
         frames, "stream_id", watermark, keyframe_stateful_fn(min_interval_ms, scene_threshold),
         KEYFRAME_OUT_SCHEMA, KEYFRAME_STATE_SCHEMA,
-    )
-
-
-FUNNEL_STATE_SCHEMA = "t_view long, t_click long, done boolean"
-FUNNEL_OUT_SCHEMA = (
-    "user_id long, t_view timestamp, t_click timestamp, t_purchase timestamp"
-)
-
-
-def funnel_stateful_fn(within_ms: int = 172_800_000):
-    """Streaming ordered-funnel state machine (the CEP pattern-match the
-    reference's Flink lineage is known for, over b55's exact semantics):
-    per-user state is three scalars — first 'view' time, first
-    qualifying 'click' time, and a done flag — advanced in event-time
-    order. A conversion emits exactly when the first 'purchase' lands
-    within ``within_ms`` of the click that itself landed within
-    ``within_ms`` of the first view; on in-order arrival this equals
-    batch b55's converted rows row-for-row
-    (tests/test_streaming_funnel.py). State is O(1) per user and
-    expires by event-time timeout 2x``within_ms`` after the funnel's
-    last step, so abandoned funnels don't accumulate."""
-
-    within_us = within_ms * 1_000  # state runs in MICROSECONDS: the
-    # event timestamps carry us precision and the batch twin (b55)
-    # compares at full precision, so ms truncation would flip boundary
-    # comparisons and shift emitted times.
-
-    def fn(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            if state.exists:
-                state.remove()
-            return
-        t_view, t_click, done = state.get if state.exists else (-1, -1, False)
-        rows = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            "ts", kind="mergesort"
-        )
-        ts_us = (rows["ts"].astype("int64") // 1_000).tolist()
-        kinds = rows["event_type"].tolist()
-        out = []
-        for t, kind in zip(ts_us, kinds):
-            if done:
-                break
-            if kind == "view" and t_view < 0:
-                t_view = t
-            elif (
-                kind == "click"
-                and t_view >= 0
-                and t_click < 0
-                and t_view < t <= t_view + within_us
-            ):
-                t_click = t
-            elif (
-                kind == "purchase"
-                and t_click >= 0
-                and t_click < t <= t_click + within_us
-            ):
-                out.append((user_id, t_view, t_click, t))
-                done = True
-        state.update((t_view, t_click, done))
-        anchor = max(t_click, t_view, max(ts_us, default=0))
-        # timeout API takes epoch MILLISECONDS
-        state.setTimeoutTimestamp((anchor + 2 * within_us) // 1_000)
-        if out:
-            yield pd.DataFrame(
-                [
-                    {
-                        "user_id": int(u),
-                        "t_view": pd.Timestamp(v, unit="us"),
-                        "t_click": pd.Timestamp(c, unit="us"),
-                        "t_purchase": pd.Timestamp(p, unit="us"),
-                    }
-                    for (u, v, c, p) in out
-                ]
-            )
-
-    return fn
-
-
-def funnel_stream(
-    events: DataFrame, within_ms: int = 172_800_000, watermark: str = "30 minutes"
-) -> DataFrame:
-    """view -> click -> purchase conversions over a user event stream."""
-    return _with_state(
-        events, "user_id", watermark, funnel_stateful_fn(within_ms=within_ms),
-        FUNNEL_OUT_SCHEMA, FUNNEL_STATE_SCHEMA, GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-ANOMALY_STATE_SCHEMA = "vals array<double>"
-ANOMALY_OUT_SCHEMA = (
-    "user_id long, event_id long, ts timestamp, value double, zscore double"
-)
-
-
-def anomaly_stateful_fn(
-    window: int = 49, warmup: int = 20, threshold: float = 2.5
-):
-    """Streaming twin of x73's rolling z-score anomaly detector: per
-    user, keep the last ``window`` values as state (bounded — 49
-    doubles/key), score each arriving value against the CURRENT buffer
-    (trailing, self-excluded, sample stddev), emit rows whose rounded
-    |z| exceeds the threshold once ``warmup`` history exists. On
-    in-order arrival this equals the batch window query row-for-row
-    (tests/test_streaming_anomaly.py), including across micro-batch
-    splits — the buffer carries over in the state store."""
-    import math
-
-    def fn(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:  # pragma: no cover - no timeout registered
-            return
-        (vals,) = state.get if state.exists else ([],)
-        vals = list(vals)
-        rows = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            ["ts", "event_id"], kind="mergesort"
-        )
-        out = []
-        for ts, event_id, v in zip(rows["ts"], rows["event_id"], rows["value"]):
-            n = len(vals)
-            if n >= warmup:
-                mu = sum(vals) / n
-                var = sum((x - mu) ** 2 for x in vals) / (n - 1)
-                sigma = math.sqrt(var)
-                if sigma > 0:
-                    z = round((v - mu) / sigma, 3)
-                    if abs(z) > threshold:
-                        out.append((user_id, int(event_id), ts, round(v, 4), z))
-            vals.append(float(v))
-            if len(vals) > window:
-                vals.pop(0)
-        state.update((vals,))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["user_id", "event_id", "ts", "value", "zscore"]
-            )
-
-    return fn
-
-
-def anomaly_stream(
-    events: DataFrame,
-    window: int = 49,
-    warmup: int = 20,
-    threshold: float = 2.5,
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Rolling z-score anomalies over a keyed event stream (x73's
-    streaming twin)."""
-    return _with_state(
-        events, "user_id", watermark,
-        anomaly_stateful_fn(window=window, warmup=warmup, threshold=threshold),
-        ANOMALY_OUT_SCHEMA, ANOMALY_STATE_SCHEMA,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Inter-arrival gap stream (x90's streaming twin)
-# ---------------------------------------------------------------------------
-
-GAP_STATE_SCHEMA = "last_ms long"
-GAP_OUT_SCHEMA = "user_id long, event_id long, event_type string, log2_bucket int"
-
-
-def gap_stateful_fn():
-    """Streaming twin of x90's inter-arrival histogram input: per user,
-    carry only the last event's epoch-ms (ONE long of state per key),
-    emit each arriving event's gap bucket floor(log2(gap_ms + 1)) —
-    computed with integer bit_length, the same arithmetic as the batch
-    query's binary-repr length. On in-order arrival the emitted
-    (user, event, bucket) rows equal the batch lag-window rows across
-    micro-batch boundaries (the last-ms carries in the state store)."""
-
-    def fn(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:  # pragma: no cover - no timeout registered
-            return
-        (last_ms,) = state.get if state.exists else (None,)
-        rows = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            ["ts", "event_id"], kind="mergesort"
-        )
-        out = []
-        for ts, event_id, etype in zip(rows["ts"], rows["event_id"], rows["event_type"]):
-            ms = int(pd.Timestamp(ts).value // 1_000_000)
-            if last_ms is not None:
-                gap = ms - last_ms
-                if gap < 0:
-                    # Cross-batch late arrival (ms earlier than the carried
-                    # last_ms despite the watermark): Python bit_length on a
-                    # negative int uses |x|, which would emit a nonsense
-                    # bucket the batch lag-window twin can never produce.
-                    # Drop the row instead — the batch query, which sorts
-                    # globally per key, never sees a negative gap; dropping
-                    # keeps the streaming output a subset of batch output
-                    # rather than a divergent superset.
-                    continue
-                bucket = (gap + 1).bit_length() - 1
-                out.append((user_id, int(event_id), etype, bucket))
-            last_ms = ms
-        state.update((last_ms,))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["user_id", "event_id", "event_type", "log2_bucket"]
-            )
-
-    return fn
-
-
-def gap_stream(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
-    """Per-event inter-arrival gap buckets over a keyed stream — the
-    stateful input feed of x90's histogram (aggregate the output by
-    (event_type, log2_bucket) downstream for the running histogram)."""
-    return _with_state(
-        events, "user_id", watermark, gap_stateful_fn(), GAP_OUT_SCHEMA, GAP_STATE_SCHEMA
     )
