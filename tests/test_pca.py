@@ -66,32 +66,3 @@ def test_top_components_explain_variance_monotonically(cov_and_data):
     assert np.all(np.diff(share) >= -1e-12)
     assert 0.0 < share[0] <= 1.0 + 1e-12
 
-
-def test_train_and_project_end_to_end(spark, sf_dir):
-    """train_pca + pca_project: the projected corpus's per-component
-    sample variance equals the eigenvalue train_pca reported, the
-    components are uncorrelated, and the whole projection is a pure
-    Catalyst expression (no exchange, no Python in the plan)."""
-    import numpy as np
-
-    from video_stream_processing_spark.operators.stats import (
-        pca_project,
-        train_pca,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    mean, comps, evals = train_pca(emb, n_components=4)
-    proj = pca_project(emb, mean, comps)
-    plan = proj._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and "Python" not in plan
-
-    p = np.array([[r[f"pc{c}"] for c in range(4)] for r in proj.collect()])
-    # variance along each component == its eigenvalue (PCA identity)
-    for c in range(4):
-        assert np.isclose(p[:, c].var(ddof=1), evals[c], rtol=1e-3)
-    # decorrelation: off-diagonal covariance of the projected coords ~ 0
-    pc_cov = np.cov(p, rowvar=False)
-    off = pc_cov - np.diag(np.diag(pc_cov))
-    assert np.max(np.abs(off)) < 1e-4
-    # eigenvalues descend
-    assert all(evals[i] >= evals[i + 1] for i in range(3))

@@ -116,6 +116,90 @@ def test_segment_hook_applied_before_sink(spark, tmp_path):
     assert all(r["quality_ok"] and r["frame_count"] >= 2 for r in rows)
 
 
+def _state_stores(q):
+    return [op.numStateStoreInstances for op in q.lastProgress.stateOperators]
+
+
+def test_stream_queries_start_with_one_state_partition(spark, tmp_path):
+    """Both queries run STATE_PARTITIONS state stores and leave the
+    session's shuffle partition count as it was; a segment checkpoint
+    written at 3 partitions keeps 3 when restarted through segment_query
+    and yields the segments of an uninterrupted run."""
+    from video_stream_processing_spark.streaming.pipeline import (
+        STATE_PARTITIONS,
+        detection_query,
+        segment_query,
+    )
+    from video_stream_processing_spark.streaming.sinks import write_segments
+    from video_stream_processing_spark.streaming.stateful import exact_segments_stream
+
+    assert STATE_PARTITIONS == 1
+    schema = "stream_id string, frame_id long, ts timestamp, scene_signal double"
+    frames = spark.read.parquet(_frames_dir(spark, tmp_path))
+    halves = [frames.where(F.col("frame_id") < 60), frames.where(F.col("frame_id") >= 60)]
+
+    def stream(d):
+        return spark.readStream.schema(schema).parquet(d)
+
+    def drain(q, d, *more):
+        """Drain ``q``; then append each frame of ``more`` to ``d`` and
+        drain again; then stop ``q``."""
+        try:
+            q.processAllAvailable()
+            for half in more:
+                half.coalesce(1).write.mode("append").parquet(d)
+                q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def segments(out):
+        return sorted(
+            (r["stream_id"], r["start_time"], r["end_time"], r["frame_count"])
+            for r in spark.read.parquet(out).collect()
+        )
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    whole = str(tmp_path / "whole")
+    halves[0].coalesce(1).write.parquet(whole)
+    det = detection_query(
+        stream(whole), str(tmp_path / "fact"), str(tmp_path / "ck-det"),
+        min_interval_ms=60_000, scene_threshold=30.0, trigger_seconds=0,
+    )
+    seg = segment_query(
+        stream(whole), str(tmp_path / "seg"), str(tmp_path / "ck-seg"),
+        duration_ms=600_000, trigger_seconds=0,
+    )
+    drain(det, whole)
+    drain(seg, whole, halves[1])
+    assert spark.conf.get(key) == before
+    assert _state_stores(det) == [STATE_PARTITIONS]
+    assert _state_stores(seg) == [STATE_PARTITIONS]
+
+    # A checkpoint begun outside segment_query at 3 partitions.
+    split = str(tmp_path / "split")
+    ck = str(tmp_path / "ck-old")
+    out = str(tmp_path / "seg-old")
+    halves[0].coalesce(1).write.parquet(split)
+    spark.conf.set(key, "3")
+    try:
+        old = (
+            exact_segments_stream(stream(split).select("stream_id", "ts"), duration_ms=600_000)
+            .writeStream.foreachBatch(write_segments(out))
+            .option("checkpointLocation", ck)
+            .outputMode("append")
+            .start()
+        )
+    finally:
+        spark.conf.set(key, before)
+    drain(old, split)
+    restarted = segment_query(stream(split), out, ck, duration_ms=600_000, trigger_seconds=0)
+    drain(restarted, split, halves[1])
+    assert _state_stores(restarted) == [3]
+    expected = segments(str(tmp_path / "seg"))
+    assert expected and segments(out) == expected
+
+
 def test_observe_metrics(spark, sf_dir):
     from video_stream_processing_spark.operators.metrics import observe_frames
     from video_stream_processing_spark.tables import load_table

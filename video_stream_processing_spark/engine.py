@@ -71,7 +71,13 @@ class Engine:
         handles (stop/awaitTermination belong to the caller).
 
         Unset arguments fall back to ``self.config`` — the
-        application.properties-driven workflow of the reference job."""
+        application.properties-driven workflow of the reference job.
+
+        Each query starts with ``streaming.pipeline.STATE_PARTITIONS``
+        state partitions by setting the session's shuffle partition count
+        for the length of its start. Do not call this while another
+        thread plans batch work on ``frames``' session: a batch query
+        planned in that window gets the stream queries' count."""
         import os
 
         from video_stream_processing_spark.streaming.pipeline import (

@@ -33,8 +33,6 @@ __all__ = [
     "covariance_upper_triangle_arrow",
     "covariance_upper_triangle_jvm",
     "finish_covariance",
-    "pca_project",
-    "train_pca",
 ]
 
 
@@ -206,82 +204,3 @@ def finish_covariance(partials: DataFrame, quant: float = 1e6) -> DataFrame:
         "i", "j", (F.round(num / den, 6) + F.lit(0.0)).alias("cov")
     )
 
-
-def train_pca(
-    emb: DataFrame,
-    dim: int = 64,
-    n_components: int = 8,
-    embedding_col: str = "embedding",
-):
-    """Driver-side PCA fit from the distributed sufficient statistics:
-    one covariance job (covariance_upper_triangle_arrow — the corpus's
-    only full pass) plus one dim-sized mean aggregate, then an O(dim^3)
-    numpy eigendecomposition of the 64x64 matrix ON THE DRIVER. Returns
-    (mean, components, explained_variance): mean is a dim-list,
-    components a n_components x dim list-of-lists (rows = descending
-    eigenvalue order), explained_variance the matching eigenvalues.
-
-    This is the honest 100 TB split: the cluster computes O(corpus)
-    sums, the driver holds only dim^2 floats — same division of labor
-    as the k-means/PQ trainers (operators/similarity.py)."""
-    import numpy as np
-
-    cov_rows = covariance_upper_triangle_arrow(
-        emb, dim=dim, embedding_col=embedding_col
-    ).collect()
-    cov = np.zeros((dim, dim))
-    for r in cov_rows:
-        cov[r["i"], r["j"]] = r["cov"]
-        cov[r["j"], r["i"]] = r["cov"]
-    mean_rows = (
-        # same valid-vector gate as the covariance: a wrong-length row
-        # must not skew the low-index means it does contribute to
-        _valid_vectors(emb, dim, embedding_col)
-        .select(F.posexplode(embedding_col).alias("i", "x"))
-        .groupBy("i")
-        .agg(F.avg(F.col("x").cast("double")).alias("mu"))
-        .collect()
-    )
-    mean = [0.0] * dim
-    for r in mean_rows:
-        mean[r["i"]] = r["mu"]
-    evals, evecs = np.linalg.eigh(cov)
-    order = np.argsort(evals)[::-1][:n_components]
-    components = [evecs[:, c].tolist() for c in order]
-    return mean, components, [float(evals[c]) for c in order]
-
-
-def pca_project(
-    emb: DataFrame,
-    mean: list[float],
-    components: list[list[float]],
-    embedding_col: str = "embedding",
-    keep_cols: tuple[str, ...] = ("vec_id",),
-) -> DataFrame:
-    """Project each vector onto literal principal components — a PURE
-    Catalyst projection (zip_with multiply + aggregate sum per
-    component, literal arrays built as one parsed SQL expression, the
-    ~55x-faster idiom from the k-means/PQ codebooks): no join, no
-    shuffle, no Python — dimension reduction rides the scan. Output
-    columns pc0..pc{k-1} (doubles). This is the storage/ANN compression
-    step x109's statistics exist for: project at ingest, keep the
-    original vector only for rerank."""
-
-    def lit_arr(values: list[float]):
-        return F.expr(
-            "array(" + ",".join(repr(float(v)) + "D" for v in values) + ")"
-        )
-
-    centered = F.zip_with(
-        F.col(embedding_col), lit_arr(mean), lambda a, b: a.cast("double") - b
-    )
-    out = emb.select(*keep_cols, centered.alias("__centered"))
-    projs = [
-        F.aggregate(
-            F.zip_with(F.col("__centered"), lit_arr(w), lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ).alias(f"pc{c}")
-        for c, w in enumerate(components)
-    ]
-    return out.select(*keep_cols, *projs)

@@ -147,8 +147,11 @@ def get_spark(
 
     local[N] for tests/bench; on a real cluster the same code runs with
     master/memory supplied by spark-submit. Shuffle partitions default to
-    the test-box core count; on a 1000-executor cluster you would set this
-    to ~2-3x total cores and let AQE coalesce down.
+    ``SPARK_SHUFFLE_PARTITIONS``, or 32 when it is unset; on a
+    1000-executor cluster you would set this to ~2-3x total cores and let
+    AQE coalesce down. The pipeline's detection and segment queries do
+    not take this default: they fix their state partition count when
+    they start (``streaming.pipeline.STATE_PARTITIONS``).
 
     Python workers run under ``worker_daemon`` (see the module
     docstring): it stops each Python task from re-reading pyspark.zip,

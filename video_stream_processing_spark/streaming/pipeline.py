@@ -17,6 +17,13 @@ directory replayed with ``spark.readStream.schema(FRAME_SCHEMA)`` is the
 deterministic test path. A real Kafka deployment swaps in
 readStream.format("kafka") + from_json with the same downstream, exactly
 like the reference's KafkaSource + JSON deserializer (§2.1 #1-#2).
+
+``detection_query`` and ``segment_query`` start with ``STATE_PARTITIONS``
+state partitions, not the session's batch shuffle partition count; a
+query restarted from an existing checkpoint keeps the count that
+checkpoint recorded. ``flagship_job_stream`` still starts at the
+session's count: its dedup gate, index anti-joins and detect UDF shuffle
+on the same setting and have not been measured at one partition.
 """
 
 from __future__ import annotations
@@ -26,6 +33,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from video_stream_processing_spark.streaming.sinks import (
     write_detections_fact,
@@ -40,6 +48,40 @@ FRAME_SCHEMA = (
     "stream_id string, frame_id long, ts timestamp, scene_signal double, "
     "frame_data binary"
 )
+
+# State partitions detection_query and segment_query start with. Each
+# partition pays a state-store commit and a Python update call on every micro-batch,
+# whether or not it holds a key: ~0.1 s of commit plus 0.1-0.2 s of
+# update task time per partition (tools/stream_bench.py keyframe_gate and
+# exact_segments, local[4], 1 vs 4 partitions). A key costs ~4-5 ms of
+# update per batch at ~67 rows per key. One partition won at 15 keys
+# (addBatch 0.30 vs 0.33 s gate, 0.36 vs 0.47 s segments); four won at
+# 150 keys (0.82 vs 0.59 s, 0.88 vs 0.67 s) and 1,500 keys (7.6 vs 2.6 s,
+# 6.8 vs 2.5 s). A linear fit puts the knee at ~25-50 keys per batch, so
+# the reference's three cameras want one partition and thousands of
+# cameras want about one per core.
+STATE_PARTITIONS = 1
+
+
+def _start(frames: DataFrame, writer: DataStreamWriter) -> StreamingQuery:
+    """``writer.start()`` with ``spark.sql.shuffle.partitions`` at
+    ``STATE_PARTITIONS`` on the session of ``frames``, restored once the
+    query exists. The query copies the session conf when it is created
+    and records the count in its offset log on the first batch; a restart
+    reads the count back from the checkpoint, so an existing checkpoint
+    keeps the count it was written with. The setting is session-wide
+    while ``start()`` runs: a batch query planned on the same session
+    from another thread in that window gets ``STATE_PARTITIONS`` shuffle
+    partitions, so do not start stream queries while another thread
+    plans batch work on their session."""
+    conf = frames.sparkSession.conf
+    key = "spark.sql.shuffle.partitions"
+    old = conf.get(key)
+    conf.set(key, str(STATE_PARTITIONS))
+    try:
+        return writer.start()
+    finally:
+        conf.set(key, old)
 
 
 def rate_frames(
@@ -131,12 +173,12 @@ def detection_query(
         confidence_threshold=confidence_threshold,
         nms_iou_threshold=nms_iou_threshold,
     )
-    return (
+    return _start(
+        frames,
         dets.writeStream.foreachBatch(write_detections_fact(fact_dir))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(processingTime=f"{trigger_seconds} seconds")
-        .outputMode("append")
-        .start()
+        .outputMode("append"),
     )
 
 
@@ -165,12 +207,12 @@ def segment_query(
     )
     if segment_hook is not None:
         segs = segment_hook(segs)
-    return (
+    return _start(
+        frames,
         segs.writeStream.foreachBatch(write_segments(segments_dir, encoder))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(processingTime=f"{trigger_seconds} seconds")
-        .outputMode("append")
-        .start()
+        .outputMode("append"),
     )
 
 
