@@ -244,19 +244,9 @@ def test_ndjson_sink_wire_format(spark, tmp_path):
     assert rec["object_class"] == "car" and rec["frame_id"] == 7
 
 
-def test_idempotent_sink_replay_does_not_duplicate(spark, tmp_path):
-    """Simulate the failure window between sink write and checkpoint
-    commit: deliver the SAME micro-batch (same batch_id) twice — the
-    idempotent sink must keep exactly one copy; the plain append sink
-    would double it."""
-    from video_stream_processing_spark.streaming.sinks import (
-        write_detections_fact,
-        write_detections_fact_idempotent,
-    )
-
-    batch = spark.createDataFrame(
-        [("s1", "2024-03-05 14:30:00", "car", 0.9), ("s2", "2024-03-05 15:00:00", "dog", 0.8)],
-        "stream_id string, detection_time string, object_class string, confidence double",
+def _fact_batch(spark, rows):
+    return spark.createDataFrame(
+        rows, "stream_id string, detection_time string, object_class string, confidence double"
     ).select(
         "stream_id",
         F.col("detection_time").cast("timestamp").alias("detection_time"),
@@ -264,35 +254,10 @@ def test_idempotent_sink_replay_does_not_duplicate(spark, tmp_path):
         "confidence",
     )
 
-    idem_dir = str(tmp_path / "idem")
-    sink = write_detections_fact_idempotent(idem_dir)
-    sink(batch, 7)
-    sink(batch, 7)  # replay of the SAME batch id
-    assert spark.read.parquet(idem_dir).count() == 2  # no duplicates
 
-    sink(batch, 8)  # a genuinely new batch appends
-    assert spark.read.parquet(idem_dir).count() == 4
-
-    # contrast: plain append sink duplicates on replay (documented)
-    app_dir = str(tmp_path / "app")
-    plain = write_detections_fact(app_dir)
-    plain(batch, 7)
-    plain(batch, 7)
-    assert spark.read.parquet(app_dir).count() == 4
-
-
-def test_idempotent_segments_sink_replay_does_not_duplicate(spark, tmp_path):
-    """VERDICT r1 item 5: write_segments was mode-append — a replayed
-    micro-batch duplicated segment rows. The idempotent variant must
-    keep one copy per (batch_id, segment) and derive identical object
-    keys on replay."""
-    from video_stream_processing_spark.streaming.sinks import write_segments
-
-    batch = spark.createDataFrame(
-        [
-            ("s1", "2024-03-05 14:30:00", "2024-03-05 14:33:00", 181, 180_000),
-            ("s2", "2024-03-05 15:00:00", "2024-03-05 15:03:10", 190, 190_000),
-        ],
+def _segments_batch(spark, rows):
+    return spark.createDataFrame(
+        rows,
         "stream_id string, start_time string, end_time string, frame_count int, duration_ms long",
     ).select(
         "stream_id",
@@ -302,16 +267,57 @@ def test_idempotent_segments_sink_replay_does_not_duplicate(spark, tmp_path):
         "duration_ms",
     )
 
-    seg_dir = str(tmp_path / "segs")
-    sink = write_segments(seg_dir, idempotent=True)
-    sink(batch, 3)
-    sink(batch, 3)  # replay of the SAME batch id
-    rows = spark.read.parquet(seg_dir).collect()
-    assert len(rows) == 2  # no duplicate segment rows
-    keys = {r["object_key"] for r in rows}
-    assert keys == {
-        "videos/s1/20240305/14/s1_1709649000000.mp4",
-        "videos/s2/20240305/15/s2_1709650800000.mp4",
-    }
-    sink(batch, 4)  # genuinely new batch id appends
-    assert spark.read.parquet(seg_dir).count() == 4
+
+# case -> (sink name, batch factory, first batch rows, second batch rows,
+# the columns that identify a written row, the rows both batches write)
+_REPLAY_CASES = {
+    "detections_fact": (
+        "write_detections_fact",
+        _fact_batch,
+        [("s1", "2024-03-05 14:30:00", "car", 0.9), ("s2", "2024-03-05 15:00:00", "dog", 0.8)],
+        [("s1", "2024-03-05 14:31:00", "bus", 0.7)],
+        ["stream_id", "object_class", "confidence"],
+        [("s1", "car", 0.9), ("s2", "dog", 0.8), ("s1", "bus", 0.7)],
+    ),
+    "segments": (
+        "write_segments",
+        _segments_batch,
+        [
+            ("s1", "2024-03-05 14:30:00", "2024-03-05 14:33:00", 181, 180_000),
+            ("s2", "2024-03-05 15:00:00", "2024-03-05 15:03:10", 190, 190_000),
+        ],
+        [("s1", "2024-03-05 14:33:01", "2024-03-05 14:36:01", 180, 180_000)],
+        ["stream_id", "object_key", "frame_count"],
+        [
+            ("s1", "videos/s1/20240305/14/s1_1709649000000.mp4", 181),
+            ("s2", "videos/s2/20240305/15/s2_1709650800000.mp4", 190),
+            ("s1", "videos/s1/20240305/14/s1_1709649181000.mp4", 180),
+        ],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_REPLAY_CASES))
+def test_sink_replay_keeps_each_row_once(spark, tmp_path, case):
+    """The failure window between sink write and checkpoint commit: a
+    micro-batch delivered twice under one batch id, then a new batch
+    under the next id. Every row must be stored exactly once, read both
+    the way Spark reads the table and the way pyarrow's hive dataset
+    reads it (which skips ``_``- and ``.``-prefixed directories). A
+    replayed segment batch derives the same object keys."""
+    import pyarrow.dataset as ds
+
+    from video_stream_processing_spark.streaming import sinks
+
+    name, build, first, second, cols, want = _REPLAY_CASES[case]
+    out = str(tmp_path / case)
+    sink = getattr(sinks, name)(out)
+    sink(build(spark, first), 7)
+    sink(build(spark, first), 7)  # replay of the same batch id
+    sink(build(spark, second), 8)
+
+    by_spark = [tuple(r) for r in spark.read.parquet(out).select(*cols).collect()]
+    table = ds.dataset(out, format="parquet", partitioning="hive").to_table(columns=cols)
+    by_arrow = list(zip(*(table.column(c).to_pylist() for c in cols)))
+    assert sorted(by_spark) == sorted(want)
+    assert sorted(by_arrow) == sorted(want)

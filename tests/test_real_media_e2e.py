@@ -5,7 +5,7 @@ real binary media, composed from the shipped pieces (VERDICT r3 item 4):
     format, VideoStreamMockProducer.java:211-218) ->
     keyframe_gate_from_bytes (histogram correlation on the actual
     bytes) -> OnnxDetector with its DEFAULT numpy decoder + fake ONNX
-    session -> NMS -> explode -> idempotent fact sink;  all frames ->
+    session -> NMS -> explode -> batch-keyed fact sink;  all frames ->
     exact segments -> segments sink (real FFmpegEncoder where ffmpeg
     exists, Noop otherwise).
 
@@ -71,7 +71,7 @@ def test_full_job_on_real_frames(spark, tmp_path, codec):
     from video_stream_processing_spark.streaming.sinks import (
         FFmpegEncoder,
         NoopEncoder,
-        write_detections_fact_idempotent,
+        write_detections_fact,
         write_segments,
     )
 
@@ -137,7 +137,7 @@ def test_full_job_on_real_frames(spark, tmp_path, codec):
     )
 
     fact_dir = str(tmp_path / "fact")
-    sink = write_detections_fact_idempotent(fact_dir)
+    sink = write_detections_fact(fact_dir)
     sink(fact, 0)
     sink(fact, 0)  # replay of the same micro-batch must not duplicate
     stored = spark.read.parquet(fact_dir)
@@ -164,7 +164,7 @@ def test_full_job_on_real_frames(spark, tmp_path, codec):
         encoder = NoopEncoder()
 
     seg_dir = str(tmp_path / "segments")
-    seg_sink = write_segments(seg_dir, encoder, idempotent=True)
+    seg_sink = write_segments(seg_dir, encoder)
     seg_sink(segs, 0)
     seg_sink(segs, 0)  # replay
     seg_rows = spark.read.parquet(seg_dir).collect()
@@ -186,15 +186,13 @@ def test_streaming_job_on_real_jpeg_frames(spark, tmp_path):
     """Streaming form of the same job on the reference's actual wire
     format (JPEG): frames replayed via readStream -> stateful bytes gate
     (applyInPandasWithState) -> stream-static payload re-join -> detect
-    -> explode -> idempotent fact sink through writeStream.foreachBatch.
+    -> explode -> batch-keyed fact sink through writeStream.foreachBatch.
     Must land exactly the batch composition's fact rows."""
     from video_stream_processing_spark.operators.detection import (
         DETECTIONS_TYPE,
         OnnxDetector,
     )
-    from video_stream_processing_spark.streaming.sinks import (
-        write_detections_fact_idempotent,
-    )
+    from video_stream_processing_spark.streaming.sinks import write_detections_fact
     from video_stream_processing_spark.streaming.stateful import (
         keyframes_from_bytes_stream,
     )
@@ -243,7 +241,7 @@ def test_streaming_job_on_real_jpeg_frames(spark, tmp_path):
 
     fact_dir = str(tmp_path / "fact-stream")
     q = (
-        fact.writeStream.foreachBatch(write_detections_fact_idempotent(fact_dir))
+        fact.writeStream.foreachBatch(write_detections_fact(fact_dir))
         .option("checkpointLocation", str(tmp_path / "ck"))
         .outputMode("append")
         .start()

@@ -148,7 +148,10 @@ def test_detections_fact_sink_layout(spark, tmp_path):
     out_dir = str(tmp_path / "fact")
     write_detections_fact(out_dir)(batch, 0)
     # partition layout == the Doris bucketing / MinIO key analog
-    assert os.path.isdir(os.path.join(out_dir, "stream_id=s1", "date_key=20240305", "hour_key=14"))
+    hour = os.path.join(out_dir, "stream_id=s1", "date_key=20240305", "hour_key=14")
+    assert os.path.isdir(hour)
+    # each micro-batch lands in its own leaf under the layout above
+    assert os.listdir(hour) == ["batch_id=0"]
     back = spark.read.parquet(out_dir)
     assert back.count() == 1
     assert {r["object_class"] for r in back.collect()} == {"car"}

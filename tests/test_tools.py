@@ -81,6 +81,11 @@ def test_stream_bench_measures_every_path(spark, sf_dir, monkeypatch):
     assert len(stream_bench.ALL_PATHS) == 4
     for name in stream_bench.ALL_PATHS:
         assert res[name]["frames_per_sec"] > 0, name
+    # the stateful paths start like the pipeline's queries
+    from video_stream_processing_spark.streaming.pipeline import STATE_PARTITIONS
+
+    for name in ("keyframe_gate", "exact_segments", "full_detection_path"):
+        assert res[name]["state_stores"] == [STATE_PARTITIONS], name
     assert len(built) == 1
     assert built[0].columns == ["stream_id", "detection_time", "object_class", "confidence"]
 

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from video_stream_processing_spark.session import get_spark
 from video_stream_processing_spark.streaming.pipeline import (
+    _start,
     detections_stream,
     neardup_gate_stream,
 )
@@ -50,8 +51,14 @@ ALL_PATHS = (
 
 def measure(spark, sf_dir: str, paths: tuple[str, ...] = ALL_PATHS) -> dict:
     """Run the requested stateful-streaming paths end-to-end (noop sink,
-    processAllAvailable) and return {path: {sec, frames_per_sec}} plus
-    n_frames. Work dir (replayed frames + checkpoints) is temp-scoped."""
+    processAllAvailable) and return {path: {sec, frames_per_sec,
+    state_stores}} plus n_frames; ``state_stores`` lists each stateful
+    operator's numStateStoreInstances. The keyframe gate, exact segments
+    and full detection paths start the way the pipeline's queries do,
+    with ``STATE_PARTITIONS`` state partitions; the near-dup gate starts
+    at the session's shuffle partition count, like
+    ``flagship_job_stream``. Work dir (replayed frames + checkpoints) is
+    temp-scoped."""
     work = tempfile.mkdtemp(prefix="vsp-stream-bench-")
     frames_dir = os.path.join(work, "frames")
     try:
@@ -117,13 +124,13 @@ def measure(spark, sf_dir: str, paths: tuple[str, ...] = ALL_PATHS) -> dict:
 
         results: dict = {"n_frames": n_frames}
         for name in paths:
-            q = (
+            writer = (
                 builders[name]()
                 .writeStream.format("noop")
                 .option("checkpointLocation", os.path.join(work, f"ck-{name}"))
                 .outputMode("append")
-                .start()
             )
+            q = writer.start() if name == "neardup_gate" else _start(stream, writer)
             try:
                 t0 = time.perf_counter()
                 q.processAllAvailable()
@@ -137,6 +144,9 @@ def measure(spark, sf_dir: str, paths: tuple[str, ...] = ALL_PATHS) -> dict:
             results[name] = {
                 "sec": round(dt, 2),
                 "frames_per_sec": round(n_frames / dt, 1),
+                "state_stores": [
+                    op.numStateStoreInstances for op in q.lastProgress.stateOperators
+                ],
             }
         return results
     finally:

@@ -30,8 +30,7 @@ class EngineConfig:
     segment_duration_ms: int = 180_000
     video_bitrate: str = "2048k"
     video_fps: int = 25
-    # storage selection (VideoStreamProcessingJob.java:84-102)
-    storage_type: str = "parquet"  # parquet | s3a-minio | s3a-oss
+    # output and checkpoint locations
     output_dir: str = "/tmp/vsp-output"
     checkpoint_dir: str = "/tmp/vsp-checkpoints"
     # watermark — OUR extension (the reference uses noWatermarks())
@@ -49,7 +48,6 @@ class EngineConfig:
         "video.segment.duration": "segment_duration_ms",
         "video.bitrate": "video_bitrate",
         "video.fps": "video_fps",
-        "storage.type": "storage_type",
         "output.dir": "output_dir",
         "checkpoint.dir": "checkpoint_dir",
         "watermark": "watermark",

@@ -389,11 +389,12 @@ FROM scored GROUP BY doc_id
 
 # --------------------------------------------------------------------------
 # Per-source quality-quantile pruning (x112) as reusable sufficient
-# statistics: histogram -> merge -> decision. The histogram is the ONLY
+# statistics: histogram -> decision. The histogram is the ONLY
 # corpus-sized pass; it is exact-integer mergeable across shards and
-# micro-batches, so the prune decision can always be recomputed from stored partials without
-# re-scanning history — the same stored-partials discipline as the
-# covariance statistics (operators/stats.py).
+# micro-batches (sum ``cnt`` per (source, q)), so the prune decision
+# can always be recomputed from stored partials without re-scanning
+# history — the same stored-partials discipline as the covariance
+# statistics (operators/stats.py).
 # --------------------------------------------------------------------------
 
 
@@ -409,12 +410,6 @@ def quality_histogram(docs: DataFrame) -> DataFrame:
         .groupBy("source", "q")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-
-
-def merge_quality_histograms(parts: DataFrame) -> DataFrame:
-    """Merge shard/micro-batch histogram partials — exact integer sums,
-    so merge order and grouping cannot change a bit."""
-    return parts.groupBy("source", "q").agg(F.sum("cnt").alias("cnt"))
 
 
 def quality_prune_report(hist: DataFrame, keep_frac: float = 0.3) -> DataFrame:

@@ -4618,7 +4618,8 @@ def x112_source_quality_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast hash join on (source) + one scalar comparison per row
     — here the report is the deliverable, so only the bounded side
     materializes. The histogram is an exact-integer MERGEABLE
-    sufficient statistic (operators/text.py:merge_quality_histograms)."""
+    sufficient statistic: partials from shards or micro-batches merge
+    by summing ``cnt`` per (source, q)."""
     docs = load_table(spark, sf_dir, "documents")
     return T.quality_prune_report(
         T.quality_histogram(docs), keep_frac=PRUNE_KEEP_FRAC

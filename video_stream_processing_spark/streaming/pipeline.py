@@ -373,10 +373,13 @@ def flagship_job_stream(
         watermark-bounded exact gate) -> stream-static re-join of
         (stream_id, frame_id, payload) by doc_id (the pull-from-object-
         storage pattern) -> stateful byte-histogram keyframe gate ->
-        detect UDF -> NMS/explode -> idempotent Doris-fact sink
+        detect UDF -> NMS/explode -> Doris-fact sink
         (VideoStreamProcessingJob.java:60-88)
       + segment side output: every gated frame -> exact unaligned
-        segments -> idempotent object-layout sink (:89-102).
+        segments -> object-layout sink (:89-102).
+
+    Both sinks are the ones ``detection_query`` and ``segment_query``
+    use: batch-id-keyed, so a replayed micro-batch replaces its rows.
 
     The Flink side output (OutputTag, SURVEY §2.1 #21) maps to two
     queries over the shared gated upstream — each re-executes the gate
@@ -402,9 +405,6 @@ def flagship_job_stream(
     never a shuffle — the re-join pulls payloads by key per micro-batch
     exactly as a production job re-reads frames from object storage.
     Returns (fact_query, segments_query), both started."""
-    from video_stream_processing_spark.streaming.sinks import (
-        write_detections_fact_idempotent,
-    )
     from video_stream_processing_spark.streaming.stateful import (
         keyframes_from_bytes_stream,
     )
@@ -461,7 +461,7 @@ def flagship_job_stream(
         F.lit("").alias("frame_url"),
     )
     fact_query = (
-        fact.writeStream.foreachBatch(write_detections_fact_idempotent(fact_dir))
+        fact.writeStream.foreachBatch(write_detections_fact(fact_dir))
         .option("checkpointLocation", f"{checkpoint_root}/fact")
         .outputMode("append")
         .start()
@@ -471,7 +471,7 @@ def flagship_job_stream(
         watermark=None,
     )
     seg_query = (
-        segs.writeStream.foreachBatch(write_segments(segments_dir, encoder, idempotent=True))
+        segs.writeStream.foreachBatch(write_segments(segments_dir, encoder))
         .option("checkpointLocation", f"{checkpoint_root}/segments")
         .outputMode("append")
         .start()

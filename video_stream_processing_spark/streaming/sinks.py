@@ -3,13 +3,18 @@ sink paths (SURVEY.md §2.1 #3-#5, §3.3):
 
 - detections fact -> partitioned parquet table (the Doris Stream-Load
   analog: DorisSinkBuilder.java:25-95 buffers NDJSON on a 5 s flush;
-  our analog is the micro-batch commit of a partitioned columnar table,
-  exactly-once via the checkpoint + deterministic batch paths);
+  our analog is the micro-batch commit of a partitioned columnar table);
 - segments -> object storage layout `videos/{stream}/{yyyyMMdd/HH}/
   {stream}_{startMs}.mp4` (MinIOVideoSink.java:50-59 / OSSVideoSink
   key format), with the ffmpeg encode behind a pluggable
   ``SegmentEncoder`` (FFmpegUtils.java:137-189 shells out to ffmpeg;
   correctness tests use the no-op encoder, SURVEY.md §3.3).
+
+Each table has one writer, and it is exactly-once: every micro-batch
+lands in its own ``batch_id=`` partition with dynamic overwrite
+(``_overwrite_batch``), so a batch that the checkpoint replays replaces
+what it wrote instead of duplicating it — the analog of the reference's
+Doris stream-load label dedup and keyed MinIO puts.
 
 Both sinks are plain functions over (batch_df, batch_id) so they are
 unit-testable without a streaming query.
@@ -25,13 +30,20 @@ from pyspark.sql import functions as F
 
 
 def _overwrite_batch(df: DataFrame, batch_id: int, out_dir: str, *partition_cols: str) -> None:
-    """Write ``df`` as parquet under its own ``__batch_id=<batch_id>``
-    partition (then ``partition_cols``) with dynamic OVERWRITE: a batch
-    replayed after a failure between sink-write and checkpoint commit
-    replaces its own partition instead of appending duplicates."""
+    """Write ``df`` as parquet partitioned by ``partition_cols`` and then
+    ``batch_id=<batch_id>``, with dynamic OVERWRITE: a batch replayed
+    after a failure between sink write and checkpoint commit replaces
+    the partitions it wrote instead of appending duplicates.
+
+    The column name has no leading underscore: readers such as
+    pyarrow's ``dataset()`` skip ``_``- and ``.``-prefixed paths as
+    hidden files, so an underscore-named partition would read as empty.
+    An output directory belongs to one checkpoint: a query started on a
+    new checkpoint numbers its batches from 0 again and would overwrite
+    the partitions the old one wrote."""
     (
-        df.withColumn("__batch_id", F.lit(batch_id))
-        .write.partitionBy("__batch_id", *partition_cols)
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.partitionBy(*partition_cols, "batch_id")
         .mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .parquet(out_dir)
@@ -39,39 +51,17 @@ def _overwrite_batch(df: DataFrame, batch_id: int, out_dir: str, *partition_cols
 
 
 def write_detections_fact(out_dir: str):
-    """foreachBatch sink: append micro-batch to a parquet fact table
+    """foreachBatch sink: the micro-batch as a parquet fact table
     partitioned by (stream_id, date_key, hour_key) — the layout the
     Doris DDL encodes with DISTRIBUTED BY HASH(stream_id) + bitmap
-    indexes (reference README.md:94-104), expressed as partition pruning."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("date_key", F.date_format("detection_time", "yyyyMMdd"))
-            .withColumn("hour_key", F.date_format("detection_time", "HH"))
-            .write.partitionBy("stream_id", "date_key", "hour_key")
-            .mode("append")
-            .parquet(out_dir)
-        )
-
-    return sink
-
-
-def write_detections_fact_idempotent(out_dir: str):
-    """Exactly-once variant of the fact sink: every micro-batch writes to
-    a batch-id-keyed partition directory with OVERWRITE semantics, so a
-    batch replayed after a failure between sink-write and checkpoint
-    commit lands in the same place instead of appending duplicates —
-    idempotent-sink + checkpoint = end-to-end exactly-once (the
-    reference's Doris stream-load relies on Doris label dedup for the
-    same guarantee; DorisSinkBuilder retry config :64).
-
-    Readers use ``out_dir`` as a normal parquet table; `__batch_id` is
-    just another partition column (prune or drop it)."""
+    indexes (reference README.md:94-104), expressed as partition pruning
+    — with each batch in its own ``batch_id`` leaf (``_overwrite_batch``)."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         _overwrite_batch(
-            batch_df.withColumn("date_key", F.date_format("detection_time", "yyyyMMdd")),
-            batch_id, out_dir, "stream_id", "date_key",
+            batch_df.withColumn("date_key", F.date_format("detection_time", "yyyyMMdd"))
+            .withColumn("hour_key", F.date_format("detection_time", "HH")),
+            batch_id, out_dir, "stream_id", "date_key", "hour_key",
         )
 
     return sink
@@ -158,20 +148,15 @@ class FFmpegEncoder(SegmentEncoder):
         return out, os.path.getsize(out)
 
 
-def write_segments(out_dir: str, encoder: SegmentEncoder | None = None, idempotent: bool = False):
+def write_segments(out_dir: str, encoder: SegmentEncoder | None = None):
     """foreachBatch sink for segment metadata: derive the object key,
     run the (pluggable) encoder per segment via a mapInPandas pass, and
-    land the `segments` metadata table (SURVEY.md §1.4).
-
-    ``idempotent=True`` writes each micro-batch into a batch-id-keyed
-    partition with dynamic OVERWRITE (mirroring
-    write_detections_fact_idempotent): a batch replayed after a failure
-    between sink-write and checkpoint commit lands in the same partition
-    instead of appending duplicate segment rows (and the object keys it
-    derives are themselves deterministic in (stream, start_ms), so the
-    re-encoded object upload overwrites rather than duplicates —
-    exactly the replay behavior of the reference's keyed MinIO put,
-    MinIOVideoSink.java:50-76)."""
+    land the `segments` metadata table (SURVEY.md §1.4), one
+    ``batch_id`` partition per micro-batch (``_overwrite_batch``). A
+    replayed batch replaces its own rows, and the object keys it derives
+    are deterministic in (stream, start_ms), so the re-encoded upload
+    overwrites rather than duplicates — the replay behavior of the
+    reference's keyed MinIO put (MinIOVideoSink.java:50-76)."""
     encoder = encoder or NoopEncoder()
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -203,9 +188,6 @@ def write_segments(out_dir: str, encoder: SegmentEncoder | None = None, idempote
                 F.unix_millis(F.col("start_time")).cast("string"), F.lit(".mp4"),
             ),
         )
-        if idempotent:
-            _overwrite_batch(with_key, batch_id, out_dir, "stream_id")
-        else:
-            with_key.write.mode("append").parquet(out_dir)
+        _overwrite_batch(with_key, batch_id, out_dir)
 
     return sink

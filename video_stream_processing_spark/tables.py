@@ -28,11 +28,6 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Dimension tables small enough to broadcast at any scale factor the
-# schema supports (region=5 rows, nation=25 always; others grow with SF).
-ALWAYS_BROADCAST = ("region", "nation")
-
-
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
